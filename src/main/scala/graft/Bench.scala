@@ -59,9 +59,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = args match {
     case Array("--child", out) => childMain(out)
-    case _ =>
-      if (sys.env.get("SPARK_GRAFT_NOFORK").contains("1")) inProcessMain()
-      else parentMain()
+    case _ => parentMain()
   }
 
   // ---------------------------------------------------------------- parent
@@ -192,38 +190,13 @@ object Bench {
     spark.stop()
   }
 
-  // ------------------------------------------------- single-JVM (dev aid)
-
-  /** SPARK_GRAFT_NOFORK=1: the pre-round-8 single-JVM path, kept for
-    * quick dev iteration on small subsets where fork overhead dwarfs
-    * the measurement. Not the graded path. */
-  private def inProcessMain(): Unit = {
-    val spark = GraftSession.local(cpus)
-    val names = selectedNames
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    names.foreach { n =>
-      try runOne(spark, SparkEntry.queries(n))
-      catch { case e: Throwable => errors(n) = e.getClass.getSimpleName }
-    }
-    val results = names.filterNot(errors.contains).map { n =>
-      val t0 = System.nanoTime()
-      try runOne(spark, SparkEntry.queries(n))
-      catch { case e: Throwable => errors(n) = e.getClass.getSimpleName }
-      n -> (System.nanoTime() - t0) / 1e9
-    }.toMap
-    val sentinels =
-      try Seq(measureSentinel(spark)) catch { case _: Throwable => Nil }
-    emit(names, results, errors, sentinels)
-    spark.stop()
-  }
-
   // ------------------------------------------------------------------ emit
 
   private def emit(names: Seq[String], results: Map[String, Double],
                    errors: scala.collection.mutable.LinkedHashMap[String, String],
                    sentinels: Seq[Double],
                    groupInfo: Seq[(Seq[String], Option[Double],
-                     Option[Double])] = Nil): Unit = {
+                     Option[Double])]): Unit = {
     val ok = names.filter(results.contains)
     val qs = ok.map(k => "\"" + k + "\":" + f"${results(k)}%.3f").mkString("{", ",", "}")
     val errJson = errors.map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")

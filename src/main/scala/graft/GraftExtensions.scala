@@ -1,220 +1,92 @@
 package graft
 
+import scala.reflect.{ClassTag, classTag}
+
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.types.Decimal
 
-import graft.functions.CosineSimilarity
+import graft.functions._
 
 /** Session extension surface — the Spark analogue of the reference's
   * `BallistaFunctionRegistry` (`core/src/registry.rs:38-48`): user functions
   * join the session at build time via `SparkSession.builder.withExtensions`.
   */
 object GraftExtensions {
+
+  /** Register SQL function `name`, built by `build` from its arguments
+    * once their count is one of `arity` (else Spark's WRONG_NUM_ARGS). */
+  private def fn[T <: Expression : ClassTag](e: SparkSessionExtensions,
+      name: String, arity: Int*)(build: Seq[Expression] => T): Unit =
+    e.injectFunction((
+      FunctionIdentifier(name),
+      new ExpressionInfo(classTag[T].runtimeClass.getName, name),
+      (children: Seq[Expression]) => {
+        if (!arity.contains(children.size))
+          throw new org.apache.spark.sql.AnalysisException(
+            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+            messageParameters = Map(
+              "functionName" -> name, "expectedNum" -> arity.mkString(" or "),
+              "actualNum" -> children.size.toString,
+              "docroot" -> "https://spark.apache.org/docs/latest"))
+        build(children)
+      }))
+
+  /** The value of argument `what` of `name`, which must be a literal
+    * that `num` accepts. */
+  private def literal[A](name: String, what: String, arg: Expression)
+                        (num: PartialFunction[Any, A]): A = {
+    if (!arg.foldable) throw new IllegalArgumentException(
+      s"$name: $what must be a literal, got ${arg.sql}")
+    num.applyOrElse(arg.eval(), (other: Any) =>
+      throw new IllegalArgumentException(
+        s"$name: non-numeric $what literal $other"))
+  }
+
+  private val asInt: PartialFunction[Any, Int] = {
+    case n: java.lang.Number => n.intValue()
+  }
+  private val asDouble: PartialFunction[Any, Double] = {
+    case d: Decimal => d.toDouble
+    case n: java.lang.Number => n.doubleValue()
+  }
+
+  private def atLeast(name: String, what: String, min: Int, v: Int): Int = {
+    if (v < min) throw new IllegalArgumentException(
+      s"$name: $what must be >= $min, got $v")
+    v
+  }
+
   val install: SparkSessionExtensions => Unit = { e =>
     // §7 path (c): custom logical node -> SparkStrategy -> SparkPlan
     // (reference ChaosExec, core/src/execution_plans/chaos_exec.rs).
     e.injectPlannerStrategy(_ => graft.plans.Chaos.ChaosStrategy)
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (children: Seq[Expression]) => {
-        if (children.size != 2) throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "cosine_sim", "expectedNum" -> "2",
-            "actualNum" -> children.size.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-        CosineSimilarity(children(0), children(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("hyperplane_sig"),
-      new ExpressionInfo(classOf[graft.functions.HyperplaneSig].getName,
-        "hyperplane_sig"),
-      (children: Seq[Expression]) => {
-        if (children.size != 2) throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "hyperplane_sig", "expectedNum" -> "2",
-            "actualNum" -> children.size.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-        val nExpr = children(1)
-        if (!nExpr.foldable) throw new IllegalArgumentException(
-          s"hyperplane_sig: nPlanes must be a literal, got ${nExpr.sql}")
-        val n = nExpr.eval() match {
-          case num: java.lang.Number => num.intValue()
-          case other => throw new IllegalArgumentException(
-            s"hyperplane_sig: non-numeric nPlanes literal $other")
-        }
-        graft.functions.HyperplaneSig(children(0), n)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("int_l2"),
-      new ExpressionInfo(classOf[graft.functions.IntL2Dist].getName,
-        "int_l2"),
-      (children: Seq[Expression]) => {
-        if (children.size != 2) throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "int_l2", "expectedNum" -> "2",
-            "actualNum" -> children.size.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-        graft.functions.IntL2Dist(children(0), children(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("ivf_argmin"),
-      new ExpressionInfo(classOf[graft.functions.IvfArgmin].getName,
-        "ivf_argmin"),
-      (children: Seq[Expression]) => {
-        if (children.size != 2) throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "ivf_argmin", "expectedNum" -> "2",
-            "actualNum" -> children.size.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-        graft.functions.IvfArgmin(children(0), children(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("tok_hashes"),
-      new ExpressionInfo(classOf[graft.functions.TokHashes].getName,
-        "tok_hashes"),
-      (children: Seq[Expression]) => {
-        if (children.size != 1) throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "tok_hashes", "expectedNum" -> "1",
-            "actualNum" -> children.size.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-        graft.functions.TokHashes(children(0))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("inter_count"),
-      new ExpressionInfo(classOf[graft.functions.IntersectCount].getName,
-        "inter_count"),
-      (children: Seq[Expression]) => {
-        if (children.size != 2) throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "inter_count", "expectedNum" -> "2",
-            "actualNum" -> children.size.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-        graft.functions.IntersectCount(children(0), children(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("simhash16"),
-      new ExpressionInfo(classOf[graft.functions.Simhash16].getName,
-        "simhash16"),
-      (children: Seq[Expression]) => {
-        if (children.size != 1) throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "simhash16", "expectedNum" -> "1",
-            "actualNum" -> children.size.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-        graft.functions.Simhash16(children(0))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[graft.functions.ShingleHashes].getName,
-        "shingle_hashes"),
-      (children: Seq[Expression]) => {
-        if (children.size != 2) throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "shingle_hashes", "expectedNum" -> "2",
-            "actualNum" -> children.size.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-        val kExpr = children(1)
-        if (!kExpr.foldable) throw new IllegalArgumentException(
-          s"shingle_hashes: k must be a literal, got ${kExpr.sql}")
-        val k = kExpr.eval() match {
-          case num: java.lang.Number => num.intValue()
-          case other => throw new IllegalArgumentException(
-            s"shingle_hashes: non-numeric k literal $other")
-        }
-        graft.functions.ShingleHashes(children(0), k)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("kll_quantile"),
-      new ExpressionInfo(classOf[graft.functions.KllQuantile].getName,
-        "kll_quantile"),
-      (children: Seq[Expression]) => {
-        if (children.size < 2 || children.size > 3)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "kll_quantile", "expectedNum" -> "2 or 3",
-              "actualNum" -> children.size.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        def num(name: String, e: Expression): Double = {
-          if (!e.foldable) throw new IllegalArgumentException(
-            s"kll_quantile: $name must be a literal, got ${e.sql}")
-          e.eval() match {
-            case d: org.apache.spark.sql.types.Decimal => d.toDouble
-            case n: java.lang.Number => n.doubleValue()
-            case other => throw new IllegalArgumentException(
-              s"kll_quantile: non-numeric $name literal $other")
-          }
-        }
-        val q = num("quantile", children(1))
-        if (q.isNaN || q < 0.0 || q > 1.0)
-          throw new IllegalArgumentException(
-            s"kll_quantile: quantile must be in [0, 1], got $q")
-        val cap = if (children.size == 3)
-          num("capacity", children(2)).toInt else 8192
-        if (cap < 8) throw new IllegalArgumentException(
-          s"kll_quantile: capacity must be >= 8, got $cap")
-        graft.functions.KllQuantile(children(0), q, cap)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("kll_sketch"),
-      new ExpressionInfo(classOf[graft.functions.KllSketchAgg].getName,
-        "kll_sketch"),
-      (children: Seq[Expression]) => {
-        if (children.isEmpty || children.size > 2)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "kll_sketch", "expectedNum" -> "1 or 2",
-              "actualNum" -> children.size.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        val cap = if (children.size == 2) {
-          val e = children(1)
-          if (!e.foldable) throw new IllegalArgumentException(
-            s"kll_sketch: capacity must be a literal, got ${e.sql}")
-          e.eval() match {
-            case n: java.lang.Number => n.intValue()
-            case other => throw new IllegalArgumentException(
-              s"kll_sketch: non-numeric capacity literal $other")
-          }
-        } else 8192
-        if (cap < 8) throw new IllegalArgumentException(
-          s"kll_sketch: capacity must be >= 8, got $cap")
-        graft.functions.KllSketchAgg(children(0), cap)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("mg_topk"),
-      new ExpressionInfo(classOf[graft.functions.MgTopK].getName,
-        "mg_topk"),
-      (children: Seq[Expression]) => {
-        if (children.size != 2)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "mg_topk", "expectedNum" -> "2",
-              "actualNum" -> children.size.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        val kExpr = children(1)
-        if (!kExpr.foldable) throw new IllegalArgumentException(
-          s"mg_topk: k must be a literal, got ${kExpr.sql}")
-        val k = kExpr.eval() match {
-          case n: java.lang.Number => n.intValue()
-          case other => throw new IllegalArgumentException(
-            s"mg_topk: non-numeric k literal $other")
-        }
-        if (k < 2) throw new IllegalArgumentException(
-          s"mg_topk: k must be >= 2, got $k")
-        graft.functions.MgTopK(children(0), k)
-      }))
+    fn(e, "cosine_sim", 2)(c => CosineSimilarity(c(0), c(1)))
+    fn(e, "hyperplane_sig", 2)(c => HyperplaneSig(c(0),
+      literal("hyperplane_sig", "nPlanes", c(1))(asInt)))
+    fn(e, "int_l2", 2)(c => IntL2Dist(c(0), c(1)))
+    fn(e, "ivf_argmin", 2)(c => IvfArgmin(c(0), c(1)))
+    fn(e, "tok_hashes", 1)(c => TokHashes(c(0)))
+    fn(e, "inter_count", 2)(c => IntersectCount(c(0), c(1)))
+    fn(e, "simhash16", 1)(c => Simhash16(c(0)))
+    fn(e, "shingle_hashes", 2)(c => ShingleHashes(c(0),
+      literal("shingle_hashes", "k", c(1))(asInt)))
+    fn(e, "kll_quantile", 2, 3) { c =>
+      val q = literal("kll_quantile", "quantile", c(1))(asDouble)
+      if (q.isNaN || q < 0.0 || q > 1.0)
+        throw new IllegalArgumentException(
+          s"kll_quantile: quantile must be in [0, 1], got $q")
+      val cap = if (c.size == 3)
+        literal("kll_quantile", "capacity", c(2))(asDouble).toInt else 8192
+      KllQuantile(c(0), q, atLeast("kll_quantile", "capacity", 8, cap))
+    }
+    fn(e, "kll_sketch", 1, 2) { c =>
+      val cap = if (c.size == 2)
+        literal("kll_sketch", "capacity", c(1))(asInt) else 8192
+      KllSketchAgg(c(0), atLeast("kll_sketch", "capacity", 8, cap))
+    }
+    fn(e, "mg_topk", 2)(c => MgTopK(c(0),
+      atLeast("mg_topk", "k", 2, literal("mg_topk", "k", c(1))(asInt))))
   }
 }

@@ -288,19 +288,12 @@ object Dedup {
     val a = rare.select(col("doc_id").as("da"), col("source"), col("h"))
     val b = rare.select(col("doc_id").as("db"), col("source").as("sb"),
       col("h").as("hb"))
-    val cand = spreadByKeys(
-      a.join(b, col("source") === col("sb") &&
-          col("h") === col("hb") && col("da") < col("db"))
-        .select(col("da"), col("db")),
-      Seq("da", "db")).dropDuplicates()
+    val cand = PairMiner.candidates(a.join(b, col("source") === col("sb") &&
+      col("h") === col("hb") && col("da") < col("db")))
     val sets = base.select(col("doc_id"), col("shs"))
-    cand
-      .join(sets.select(col("doc_id").as("da"), col("shs").as("sa")), "da")
-      .join(sets.select(col("doc_id").as("db"), col("shs").as("sb2")), "db")
-      .withColumn("inter",
-        call_function("inter_count", col("sa"), col("sb2")))
-      .withColumn("jac", col("inter").cast("double") /
-        ((size(col("sa")) + size(col("sb2"))).cast("long") - col("inter")))
+    PairMiner.verify(cand,
+        sets.select(col("doc_id").as("da"), col("shs").as("ta")),
+        sets.select(col("doc_id").as("db"), col("shs").as("tb")))
       .filter(col("jac") >= 0.5)
       .select(col("da"), col("db"), col("jac"))
       .orderBy(col("jac").desc, col("da"), col("db"))
@@ -333,25 +326,6 @@ object Dedup {
   /** Shared PPJoin prefix machinery: (base = per-doc distinct token
     * set, pref = exploded df-ranked prefixes with 0-based positions).
     * Used by the d19 miner and the d22 filter audit. */
-  /** Hash-exchange `df` on `keys` with an explicitly pinned partition
-    * count (the session's defaultParallelism). The candidate-pair
-    * distinct/fold that follows is byte-tiny ((da, db) int64 pairs) but
-    * the verify stage downstream of it is CPU-dense per byte
-    * (inter_count over ~KB token-set arrays per pair), and AQE's
-    * byte-based coalescing (parallelismFirst respects only the 1 MB
-    * minPartitionSize) collapses it to 1-4 tasks — measured 41% of d22
-    * and 7-10% of d03/d19 serialized on one core. A user repartition
-    * with explicit numPartitions is exempt from AQE coalescing, and
-    * keying it on the distinct/groupBy keys means the aggregate reuses
-    * this exchange — same exchange COUNT as the plain distinct, pinned
-    * width. Scale note: N tracks the session's core count, so a cluster
-    * run pins the same order of parallelism its shuffle.partitions
-    * would give; the verify join-attach exchanges after it are sized by
-    * AQE from real bytes as before. */
-  private def spreadByKeys(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism,
-      keys.map(col): _*)
-
   private def prefixTables(docs: DataFrame): (DataFrame, DataFrame) = {
     val base = docs
       .select(col("doc_id"), col("source"),
@@ -396,24 +370,15 @@ object Dedup {
     // shuffle shrinks too.
     val obound = least(col("pa"), col("pb")) + lit(1) +
       least(col("sza") - col("pa") - 1, col("szb") - col("pb") - 1)
-    val cand = spreadByKeys(
-      a.join(b, col("source") === col("sb") &&
-          col("h") === col("hb") && col("da") < col("db") &&
-          col("sza") * 7 <= col("szb") * 10 &&
-          col("szb") * 7 <= col("sza") * 10 &&
-          obound * 17 >= (col("sza") + col("szb")) * 7)
-        .select(col("da"), col("db")),
-      Seq("da", "db")).dropDuplicates()
+    val cand = PairMiner.candidates(a.join(b, col("source") === col("sb") &&
+      col("h") === col("hb") && col("da") < col("db") &&
+      col("sza") * 7 <= col("szb") * 10 &&
+      col("szb") * 7 <= col("sza") * 10 &&
+      obound * 17 >= (col("sza") + col("szb")) * 7))
     val sets = base.select(col("doc_id"), col("tset"))
-    cand
-      .join(sets.select(col("doc_id").as("da"), col("tset").as("ta")),
-        "da")
-      .join(sets.select(col("doc_id").as("db"), col("tset").as("tb")),
-        "db")
-      .withColumn("inter",
-        call_function("inter_count", col("ta"), col("tb")))
-      .withColumn("jac", col("inter").cast("double") /
-        ((size(col("ta")) + size(col("tb"))).cast("long") - col("inter")))
+    PairMiner.verify(cand,
+        sets.select(col("doc_id").as("da"), col("tset").as("ta")),
+        sets.select(col("doc_id").as("db"), col("tset").as("tb")))
       .filter(col("jac") >= t)
       .select(col("da"), col("db"), col("jac"))
       .orderBy(col("da"), col("db"))
@@ -481,14 +446,8 @@ object Dedup {
     * base. */
   private[graft] def ensureIngestIndexWhere(s: SparkSession, dir: String,
                                             tag: String, pred: Column): String = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    // `-v2`: round-13 artifact schema (bands carry the build-time bucket
-    // population + a bucket-grain `pops` table) — the suffix retires
-    // pre-pop artifacts that would otherwise pass the manifest check and
-    // fail the probe's pop-column read.
-    val base = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft_ingest_index/${IndexStore.fingerprint(src)}-$tag-v2")
+    val base = IndexStore.path(IndexStore.Ingest,
+      new java.io.File(s"$dir/documents.parquet"), tag)
     IndexStore.ensureBuilt(base) { tmp =>
       val sig = lshSigDf(s, dir).filter(pred)
       // The artifact's row contract is "one row per (doc, band)": docs
@@ -580,11 +539,9 @@ object Dedup {
   private[graft] def compactIndexSegments(s: SparkSession, dir: String,
                                           tag: String,
                                           segs: Seq[String]): String = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val base = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft_ingest_index/${IndexStore.fingerprint(src)}-$tag-" +
-        s"${segDigest(segs.map(new java.io.File(_).getName))}-v2")
+    val base = IndexStore.path(IndexStore.Ingest,
+      new java.io.File(s"$dir/documents.parquet"), tag,
+      segs.map(new java.io.File(_).getName))
     IndexStore.ensureBuilt(base) { tmp =>
       val popsPath = new java.io.File(tmp, "pops").getPath
       // One deduplicated union of band rows feeds BOTH outputs: the
@@ -616,18 +573,6 @@ object Dedup {
         .parquet(new java.io.File(tmp, "hashes").getPath)
     }
   }
-
-  /** 8-hex digest of a segment set's identity strings —
-    * order-insensitive (compaction folds are unions). Callers pass
-    * identities that name each segment uniquely within the artifact
-    * family: here the published segment directory names (which embed
-    * the corpus fingerprint and predicate tag); the ANN compaction
-    * passes parent/child pairs because its segments are parts INSIDE
-    * one index directory. Part of every compaction cache key. */
-  private[graft] def segDigest(ids: Seq[String]): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(ids.sorted.mkString("|").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(8)
 
   /** Corpus-side CAPPED band table off index artifacts (round-13,
     * verdict #1): the probe-time replacement for re-aggregating corpus
@@ -676,10 +621,8 @@ object Dedup {
     * published atomically. d06 itself stays the graded from-scratch
     * path — it IS the build. Returns the index directory. */
   private def ensureClusterIndex(s: SparkSession, dir: String): String = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val base = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft_cluster_index/${IndexStore.fingerprint(src)}")
+    val base = IndexStore.path(IndexStore.Cluster,
+      new java.io.File(s"$dir/documents.parquet"))
     IndexStore.ensureBuilt(base) { tmp =>
       // d06's exact chain, inlined so the mined PAIRS publish alongside
       // the converged labels (round-12: d25's leak audit probes pairs at
@@ -751,25 +694,24 @@ object Dedup {
     // table means the probe joins only buckets a bounded population
     // lives in — candidate volume stays ∝ |batch|·cap instead of
     // |batch|·(N/buckets), and the cap cost was paid at index BUILD.
-    val cand = spreadByKeys(
-      bb.join(bands,
-          col("band") === col("bandb") && col("mh") === col("mhb"))
-        .select(col("da"), col("db")),
-      Seq("da", "db")).dropDuplicates()
-    val verified = cand
-      .join(bsig.select(col("doc_id").as("da"), col("tset").as("ta")),
-        "da")
-      .join(tsets, "db")
-      .withColumn("inter",
-        call_function("inter_count", col("ta"), col("tb")))
-      .withColumn("jac", col("inter").cast("double") /
-        ((size(col("ta")) + size(col("tb"))).cast("long") - col("inter")))
+    val cand = PairMiner.candidates(bb.join(bands,
+      col("band") === col("bandb") && col("mh") === col("mhb")))
+    batchDocReport(exact, PairMiner.verify(cand,
+      bsig.select(col("doc_id").as("da"), col("tset").as("ta")), tsets))
+  }
+
+  /** Per-batch-doc ingest report shared by d18/d21/d23: each batch doc's
+    * exact flag (`exact`: doc_id, exact_dup) beside its verified
+    * candidates' count, near-dup count (J ≥ 0.7) and best match. */
+  private def batchDocReport(exact: DataFrame,
+                             verified: DataFrame): DataFrame = {
+    val perDoc = verified
       .groupBy(col("da"))
       .agg(count(lit(1)).as("n_candidates"),
         sum(when(col("jac") >= 0.7, 1L).otherwise(0L)).as("n_near"),
         max(when(col("jac") >= 0.7,
           struct(col("jac"), col("db")))).as("best"))
-    exact.join(verified, col("doc_id") === col("da"), "left_outer")
+    exact.join(perDoc, col("doc_id") === col("da"), "left_outer")
       .select(col("doc_id"), col("exact_dup"),
         coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
         coalesce(col("n_near"), lit(0L)).as("n_near"),
@@ -868,27 +810,13 @@ object Dedup {
       col("band"), col("mh"))
     val b = bands.select(col("doc_id").as("db"), col("source").as("sb"),
       col("band").as("bandb"), col("mh").as("mhb"))
-    val cand = spreadByKeys(
-      a.join(b,
-          col("source") === col("sb") && col("band") === col("bandb") &&
-          col("mh") === col("mhb") && col("da") < col("db"))
-        .select(col("da"), col("db")),
-      Seq("da", "db")).dropDuplicates()
+    val cand = PairMiner.candidates(a.join(b,
+      col("source") === col("sb") && col("band") === col("bandb") &&
+        col("mh") === col("mhb") && col("da") < col("db")))
     val tsets = sig.select(col("doc_id"), col("tset"))
-    cand
-      .join(tsets.select(col("doc_id").as("da"), col("tset").as("ta")),
-        "da")
-      .join(tsets.select(col("doc_id").as("db"), col("tset").as("tb")),
-        "db")
-      // inter_count == size(array_intersect(...)) without materializing
-      // the intersection array or ArrayIntersect's boxed hash set —
-      // this is the per-candidate-pair cost of every verify stage
-      // (round 16, guide §4; functions/IntersectCount).
-      .withColumn("inter",
-        call_function("inter_count", col("ta"), col("tb")))
-      .withColumn("uni",
-        (size(col("ta")) + size(col("tb"))).cast("long") - col("inter"))
-      .withColumn("jac", col("inter").cast("double") / col("uni"))
+    PairMiner.verify(cand,
+        tsets.select(col("doc_id").as("da"), col("tset").as("ta")),
+        tsets.select(col("doc_id").as("db"), col("tset").as("tb")))
       .filter(col("jac") >= 0.7)
       .select(col("da"), col("db"), col("jac"))
   }
@@ -1182,16 +1110,11 @@ object Dedup {
         array_distinct(call_function("shingle_hashes", col("text"), lit(3)))
           .as("shs"),
         simhashExpr(col("text")).as("sh16"))
-      val a = sigs.select(col("doc_id").as("da"), col("shs").as("sa"),
+      val a = sigs.select(col("doc_id").as("da"), col("shs").as("ta"),
         col("sh16").as("ha"))
-      val b = sigs.select(col("doc_id").as("db"), col("shs").as("sb"),
+      val b = sigs.select(col("doc_id").as("db"), col("shs").as("tb"),
         col("sh16").as("hb"))
-      pairs.join(a, "da").join(b, "db")
-        .withColumn("sh_inter",
-          call_function("inter_count", col("sa"), col("sb")))
-        .withColumn("sh_jac", col("sh_inter").cast("double") /
-          ((size(col("sa")) + size(col("sb"))).cast("long")
-            - col("sh_inter")))
+      PairMiner.verify(pairs, a, b, jac = "sh_jac")
         .withColumn("hamming",
           bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long"))
         .select(col("da"), col("db"), col("jac"), col("sh_jac"),
@@ -1228,22 +1151,12 @@ object Dedup {
           col("band"), col("bkey"))
         val bb = k.select(col("doc_id").as("db"), col("source").as("sb"),
           col("band").as("bandb"), col("bkey").as("bkeyb"))
-        val cand = spreadByKeys(
-          a.join(bb, col("source") === col("sb") &&
-              col("band") === col("bandb") && col("bkey") === col("bkeyb") &&
-              col("da") < col("db"))
-            .select(col("da"), col("db")),
-          Seq("da", "db")).dropDuplicates()
-        cand
-          .join(tsets.select(col("doc_id").as("da"), col("tset").as("ta")),
-            "da")
-          .join(tsets.select(col("doc_id").as("db"), col("tset").as("tb")),
-            "db")
-          .withColumn("inter",
-            call_function("inter_count", col("ta"), col("tb")))
-          .withColumn("jac", col("inter").cast("double") /
-            ((size(col("ta")) + size(col("tb"))).cast("long")
-              - col("inter")))
+        val cand = PairMiner.candidates(a.join(bb,
+          col("source") === col("sb") && col("band") === col("bandb") &&
+            col("bkey") === col("bkeyb") && col("da") < col("db")))
+        PairMiner.verify(cand,
+            tsets.select(col("doc_id").as("da"), col("tset").as("ta")),
+            tsets.select(col("doc_id").as("db"), col("tset").as("tb")))
           .agg(count(lit(1)).as("n_cand"),
             sum(when(col("jac") >= 0.7, 1L).otherwise(0L)).as("n_true"))
           .select(lit(s"b${b}r$r").as("config"),
@@ -1324,33 +1237,12 @@ object Dedup {
       val cb = capBuckets(bands.filter(!isNew)
         .select(col("doc_id").as("db"), col("band").as("bandb"),
           col("mh").as("mhb")), Seq("bandb", "mhb"))
-      val cand = spreadByKeys(
-        bb.join(cb,
-            col("band") === col("bandb") && col("mh") === col("mhb"))
-          .select(col("da"), col("db")),
-        Seq("da", "db")).dropDuplicates()
+      val cand = PairMiner.candidates(bb.join(cb,
+        col("band") === col("bandb") && col("mh") === col("mhb")))
       val tsets = sig.select(col("doc_id"), col("tset"))
-      val verified = cand
-        .join(tsets.select(col("doc_id").as("da"), col("tset").as("ta")),
-          "da")
-        .join(tsets.select(col("doc_id").as("db"), col("tset").as("tb")),
-          "db")
-        .withColumn("inter",
-          call_function("inter_count", col("ta"), col("tb")))
-        .withColumn("jac", col("inter").cast("double") /
-          ((size(col("ta")) + size(col("tb"))).cast("long") - col("inter")))
-        .groupBy(col("da"))
-        .agg(count(lit(1)).as("n_candidates"),
-          sum(when(col("jac") >= 0.7, 1L).otherwise(0L)).as("n_near"),
-          max(when(col("jac") >= 0.7,
-            struct(col("jac"), col("db")))).as("best"))
-      exact.join(verified, col("doc_id") === col("da"), "left_outer")
-        .select(col("doc_id"), col("exact_dup"),
-          coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-          coalesce(col("n_near"), lit(0L)).as("n_near"),
-          col("best.jac").as("best_jac"),
-          col("best.db").as("best_doc"))
-        .orderBy(col("doc_id"))
+      batchDocReport(exact, PairMiner.verify(cand,
+        tsets.select(col("doc_id").as("da"), col("tset").as("ta")),
+        tsets.select(col("doc_id").as("db"), col("tset").as("tb"))))
     },
 
     "d20_normalized_dedup" -> { (s, dir) =>
@@ -1611,7 +1503,7 @@ object Dedup {
       val obound = least(col("pa"), col("pb")) + lit(1) +
         least(col("sza") - col("pa") - 1, col("szb") - col("pb") - 1)
       val posOk = lenOk && obound * 17 >= (col("sza") + col("szb")) * 7
-      val pairs = spreadByKeys(
+      val pairs = PairMiner.spreadByKeys(
         a.join(b, col("source") === col("sb") &&
             col("h") === col("hb") && col("da") < col("db"))
           .select(col("source"), col("da"), col("db"),
@@ -1622,15 +1514,9 @@ object Dedup {
         .agg(max(col("len_ok")).as("len_ok"),
           max(col("pos_ok")).as("pos_ok"))
       val tsets = base.select(col("doc_id"), col("tset"))
-      pairs
-        .join(tsets.select(col("doc_id").as("da"), col("tset").as("ta")),
-          "da")
-        .join(tsets.select(col("doc_id").as("db"), col("tset").as("tb")),
-          "db")
-        .withColumn("inter",
-          call_function("inter_count", col("ta"), col("tb")))
-        .withColumn("jac", col("inter").cast("double") /
-          ((size(col("ta")) + size(col("tb"))).cast("long") - col("inter")))
+      PairMiner.verify(pairs,
+          tsets.select(col("doc_id").as("da"), col("tset").as("ta")),
+          tsets.select(col("doc_id").as("db"), col("tset").as("tb")))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_cand_prefix"),
           sum(col("len_ok")).as("n_cand_len"),
@@ -2142,20 +2028,11 @@ object Dedup {
       val tsets = seg("tsets", Seq("db", "tb"))
       val bb = bsig.select(col("doc_id").as("da"),
         posexplode_outer(col("sig")).as(Seq("band", "mh")))
-      val cand = spreadByKeys(
-        bb.join(bands,
-            col("band") === col("bandb") && col("mh") === col("mhb"))
-          .select(col("da"), col("db")),
-        Seq("da", "db")).dropDuplicates()
-      val verified = cand
-        .join(bsig.select(col("doc_id").as("da"), col("tset").as("ta")),
-          "da")
-        .join(tsets, "db") // brings tb AND the segment tag (db-unique)
-        .withColumn("inter",
-          call_function("inter_count", col("ta"), col("tb")))
-        .withColumn("jac", col("inter").cast("double") /
-          ((size(col("ta")) + size(col("tb"))).cast("long") -
-            col("inter")))
+      val cand = PairMiner.candidates(bb.join(bands,
+        col("band") === col("bandb") && col("mh") === col("mhb")))
+      // tsets brings tb AND the segment tag (db-unique)
+      val verified = PairMiner.verify(cand,
+          bsig.select(col("doc_id").as("da"), col("tset").as("ta")), tsets)
         .groupBy(col("da"))
         .agg(count(lit(1)).as("n_candidates"),
           sum(when(col("jac") >= 0.7, 1L).otherwise(0L)).as("n_near"),
@@ -2588,32 +2465,23 @@ object Dedup {
         .select(col("da"), col("sza"), col("p.h").as("h"))
       val post = ex.select(col("doc_id").as("db"), col("sz").as("szb"),
         col("h").as("hb"))
-      val cand = spreadByKeys(
-        pref.join(post, col("h") === col("hb") &&
-            (col("sza") < col("szb") ||
-              (col("sza") === col("szb") && col("da") < col("db"))))
-          .select(col("da"), col("db")),
-        Seq("da", "db")).dropDuplicates()
+      val cand = PairMiner.candidates(pref.join(post, col("h") === col("hb") &&
+        (col("sza") < col("szb") ||
+          (col("sza") === col("szb") && col("da") < col("db")))))
       val full = base.select(col("doc_id"), col("shs"))
-      cand
-        .join(full.select(col("doc_id").as("da"), col("shs").as("sa")),
-          "da")
-        .join(full.select(col("doc_id").as("db"), col("shs").as("sb")),
-          "db")
-        // Round 17: every feeder is array<bigint> now (d39's shingle
-        // hashes since round 16; d40/d41's block hashes converted from
-        // md5-hex strings to the 60-bit fold this round), so the
-        // verify stage uses the codegen'd inter_count like the rest of
-        // the dedup family (guide §4).
-        .withColumn("inter",
-          call_function("inter_count", col("sa"), col("sb")))
-        .withColumn("sz_small", size(col("sa")).cast("long"))
-        .withColumn("sz_big", size(col("sb")).cast("long"))
+      PairMiner.verify(cand,
+          full.select(col("doc_id").as("da"), col("shs").as("ta")),
+          full.select(col("doc_id").as("db"), col("shs").as("tb")))
+        // J is re-taken below off the projected sizes that the
+        // containment filter and `cont` already share.
+        .drop("jac")
+        .withColumn("sz_small", size(col("ta")).cast("long"))
+        .withColumn("sz_big", size(col("tb")).cast("long"))
         .filter(col("inter") * den >= col("sz_small") * num)
         .withColumn("cont", col("inter").cast("double") /
           col("sz_small").cast("double"))
-        .withColumn("jac", col("inter").cast("double") /
-          (col("sz_small") + col("sz_big") - col("inter")).cast("double"))
+        .withColumn("jac",
+          PairMiner.jaccard(col("sz_small"), col("sz_big"), col("inter")))
         .select(col("da"), col("db"), col("sz_small"), col("sz_big"),
           col("inter"), col("cont"), col("jac"),
           when(col("jac") >= 0.7, 1L).otherwise(0L).as("jac_caught"))

@@ -29,6 +29,53 @@ import scala.jdk.CollectionConverters._
   */
 private[graft] object IndexStore {
 
+  /** An artifact family: its directory name under java.io.tmpdir, the
+    * layout-version suffix that retires artifacts of an older schema
+    * (a pre-layout artifact would otherwise pass the manifest check
+    * and fail the probe's read), and the infix before a compaction's
+    * segment digest. */
+  sealed abstract class Kind(val family: String, val version: String,
+                             val segInfix: String = "")
+  /** "-v2": postings are written range-clustered across
+    * defaultParallelism files instead of one global-sorted file. */
+  case object Postings extends Kind("graft_postings_index", "-v2")
+  /** "-t2f": cells are two-level-routed, with the empty-group flat
+    * fallback (see Similarity.twoLevelAssign), so a flat-assigned or
+    * pre-fallback artifact never serves a probe whose oracle recomputes
+    * the fallback-complete cells. */
+  case object Ann extends Kind("graft_ann_index", "-t2f")
+  /** "-e1": cells carry the float embedding (denormalized for the
+    * probe); "t2f" as for [[Ann]]. */
+  case object AnnDelta extends Kind("graft_ann_dindex", "-e1t2f", "cmp-")
+  /** "-v2": bands carry the build-time bucket population, beside a
+    * bucket-grain `pops` table. */
+  case object Ingest extends Kind("graft_ingest_index", "-v2")
+  case object Cluster extends Kind("graft_cluster_index", "")
+
+  def root(kind: Kind): File =
+    new File(sys.props.getOrElse("java.io.tmpdir", "/tmp"), kind.family)
+
+  /** The one artifact-path registry: `<tmpdir>/<family>/<fingerprint of
+    * src>[-<tag>][-<segInfix><digest of segs>]<version>`. `segs` are
+    * the identities of the segments a compaction folds (order does not
+    * matter), so a grown segment set never aliases a stale fold. */
+  def path(kind: Kind, src: File, tag: String = "",
+           segs: Seq[String] = Nil): File = {
+    val tagPart = if (tag.isEmpty) "" else s"-$tag"
+    val segPart =
+      if (segs.isEmpty) "" else s"-${kind.segInfix}${segDigest(segs)}"
+    new File(root(kind),
+      s"${fingerprint(src)}$tagPart$segPart${kind.version}")
+  }
+
+  /** 8-hex order-insensitive digest of a segment set's identity
+    * strings; callers pass identities that name each segment uniquely
+    * within its artifact family. */
+  private def segDigest(ids: Seq[String]): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(ids.sorted.mkString("|").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(8)
+
   /** 16-hex content fingerprint of a parquet source file or directory:
     * md5 over canonical path + recursive child (name, length, mtime). */
   def fingerprint(src: File): String = {

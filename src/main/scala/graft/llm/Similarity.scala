@@ -328,16 +328,8 @@ object Similarity {
     * published atomically via temp-dir rename; Bench's warmup pass
     * builds it, so the measured pass times the probe alone. */
   private def ensureAnnIndex(s: SparkSession, dir: String): String = {
-    val src = new java.io.File(s"$dir/embeddings.parquet")
-    val base = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      // "-t2f": cells are TWO-LEVEL-routed since round 15 (the flat
-      // N×K assignment was the engine's last superlinear build term —
-      // see [[twoLevelAssign]]); "f" since round 16 — the route gained
-      // the empty-group flat fallback, so a pre-fallback artifact (which
-      // could have silently dropped vectors) can never serve a probe
-      // whose oracle recomputes the fallback-complete cells.
-      s"graft_ann_index/${IndexStore.fingerprint(src)}-t2f")
+    val base = IndexStore.path(IndexStore.Ann,
+      new java.io.File(s"$dir/embeddings.parquet"))
     IndexStore.ensureBuilt(base) { tmp =>
       val qvAll = ivfQv(Tables.load(s, dir, "embeddings"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -443,15 +435,8 @@ object Similarity {
   private[graft] def ensureAnnDeltaIndexWhere(s: SparkSession,
       dir: String, tag: String, basePred: Column,
       deltaPred: Column): String = {
-    val src = new java.io.File(s"$dir/embeddings.parquet")
-    val base = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      // "-e1": cells carry the float embedding since round 12 — the
-      // suffix keys the layout so a pre-e1 artifact can never serve a
-      // probe expecting the denormalized column. "-t2f": cells are
-      // two-level-routed since round 15, with the round-16 empty-group
-      // flat fallback (see [[twoLevelAssign]]).
-      s"graft_ann_dindex/${IndexStore.fingerprint(src)}-$tag-e1t2f")
+    val base = IndexStore.path(IndexStore.AnnDelta,
+      new java.io.File(s"$dir/embeddings.parquet"), tag)
     IndexStore.ensureBuilt(base) { tmp =>
       val qvAll = ivfQv(Tables.load(s, dir, "embeddings"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -517,15 +502,12 @@ object Similarity {
     * so a grown segment set can never alias a stale fold. */
   private[graft] def compactAnnSegments(s: SparkSession, dir: String,
       tag: String, centsPath: String, segs: Seq[String]): String = {
-    val src = new java.io.File(s"$dir/embeddings.parquet")
     val ids = segs.map { p =>
       val f = new java.io.File(p)
       s"${f.getParentFile.getName}/${f.getName}"
     }
-    val base = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft_ann_dindex/${IndexStore.fingerprint(src)}-$tag-cmp-" +
-        s"${Dedup.segDigest(ids)}-e1t2f")
+    val base = IndexStore.path(IndexStore.AnnDelta,
+      new java.io.File(s"$dir/embeddings.parquet"), tag, ids)
     IndexStore.ensureBuilt(base) { tmp =>
       s.read.parquet(centsPath).write.mode("overwrite")
         .parquet(new java.io.File(tmp, "cents").getPath)

@@ -50,13 +50,8 @@ object TextAnalysis {
     * directory. */
   private[llm] def ensurePostingsIndex(s: SparkSession,
                                        dir: String): String = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val base = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      // "-v2": round-17 layout — postings are written range-clustered
-      // across defaultParallelism files instead of one global-sorted
-      // file, so a pre-layout artifact must not serve the new probes.
-      s"graft_postings_index/${IndexStore.fingerprint(src)}-v2")
+    val base = IndexStore.path(IndexStore.Postings,
+      new java.io.File(s"$dir/documents.parquet"))
     IndexStore.ensureBuilt(base) { tmp =>
       val docs = Tables.load(s, dir, "documents")
         .filter(col("text").isNotNull)

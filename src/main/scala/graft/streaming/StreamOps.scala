@@ -143,15 +143,11 @@ object StreamOps {
     val cappedBands = graft.llm.Dedup.capCorpusBands(
       corpusBands.withColumnRenamed("band", "bandb")
         .withColumnRenamed("mh", "mhb"))
-    val probed = signed
+    val probed = graft.llm.PairMiner.score(signed
       .join(cappedBands,
         col("band") === col("bandb") && col("mh") === col("mhb"),
         "left_outer")
-      .join(corpusTsets, Seq("db"), "left_outer")
-      .withColumn("inter",
-        call_function("inter_count", col("ta"), col("tb")))
-      .withColumn("jac", col("inter").cast("double") /
-        ((size(col("ta")) + size(col("tb"))).cast("long") - col("inter")))
+      .join(corpusTsets, Seq("db"), "left_outer"))
     probed
       .groupBy(window(col("ts"), windowLen), col("doc_id"),
         col("exact_dup"))
@@ -749,20 +745,15 @@ object StreamOps {
           "struct<nsim:double,c_id:bigint,sim:double,seg:string>"))
     // ---- Leg 2: LSH band probe (inner joins: collision rows only).
     val (tset, sig) = graft.llm.Dedup.sigCols(col("text"))
-    val lshRows = bloomed
+    val lshRows = graft.llm.PairMiner.score(bloomed
       .select(col("doc_id"), col("ts"), tset.as("ta"),
         posexplode_outer(sig).as(Seq("band", "mh")))
       // BandCap rule — matches the batch d33 probe it is pinned to.
       .join(graft.llm.Dedup.capCorpusBands(corpusBands),
         col("band") === col("bandb") && col("mh") === col("mhb"))
-      .join(corpusTsets, "db") // brings tb + the segment tag (db-unique)
-      .withColumn("inter",
-        call_function("inter_count", col("ta"), col("tb")))
+      .join(corpusTsets, "db")) // brings tb + the segment tag (db-unique)
       .select(col("doc_id"), col("ts"), nl("bloom_pass", "long"),
-        nl("exact_dup", "long"), col("db"),
-        (col("inter").cast("double") /
-          ((size(col("ta")) + size(col("tb"))).cast("long") -
-            col("inter"))).as("jac"),
+        nl("exact_dup", "long"), col("db"), col("jac"),
         col("seg").as("lseg"),
         nl("ann",
           "struct<nsim:double,c_id:bigint,sim:double,seg:string>"))

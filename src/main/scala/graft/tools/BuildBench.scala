@@ -3,6 +3,8 @@ package graft.tools
 import java.io.File
 import java.nio.file.{Files, Paths}
 
+import graft.llm.IndexStore
+
 /** INDEX BUILD-COST bench (round 16, verdict #2) — the committed
   * artifact for the one cost class every per-query bench deliberately
   * hides: Bench's warmup pass builds the materialized indexes so the
@@ -36,15 +38,11 @@ import java.nio.file.{Files, Paths}
   */
 object BuildBench {
 
-  private def purge(roots: Seq[String], marker: String = ""): Unit = {
-    val tmp = sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    roots.foreach { r =>
-      val root = new File(tmp, r)
-      Option(root.listFiles()).getOrElse(Array.empty[File])
-        .filter(d => marker.isEmpty || d.getName.contains(marker))
+  private def purge(kinds: IndexStore.Kind*): Unit =
+    kinds.foreach { k =>
+      Option(IndexStore.root(k).listFiles()).getOrElse(Array.empty[File])
         .foreach(deleteRec)
     }
-  }
 
   private def deleteRec(f: File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(deleteRec)
@@ -71,14 +69,14 @@ object BuildBench {
     val sentPre = sentinel()
 
     // ANN family: cold lifecycle (each row builds only its stage).
-    purge(Seq("graft_ann_index", "graft_ann_dindex"))
+    purge(IndexStore.Ann, IndexStore.AnnDelta)
     val annRows = Seq("v18_indexed_ann", "v19_delta_ann",
       "v19b_ann_compaction")
     val annCold = annRows.map(n => n -> runQ(n)).toMap
     val annWarm = annRows.map(n => n -> runQ(n)).toMap
 
     // Text family: same discipline over the ingest index root.
-    purge(Seq("graft_ingest_index"))
+    purge(IndexStore.Ingest)
     val txtRows = Seq("d21_indexed_ingest", "d23_index_delta_append",
       "d43_index_compaction")
     val txtCold = txtRows.map(n => n -> runQ(n)).toMap

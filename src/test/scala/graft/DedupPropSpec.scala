@@ -213,8 +213,6 @@ class DedupPropSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"compacted-index probe diverged from monolithic index " +
         s"(${compacted.size} vs ${mono.size} rows)")
     val fp = new java.io.File(s"$dir/documents.parquet")
-    val tmpdir = sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    val key = graft.llm.IndexStore.fingerprint(fp)
     // d43's exact segment set, re-derived here to address the compacted
     // artifact (round-15: the compaction cache key mixes in the segment
     // identities, so same-tag-different-segments can never alias).
@@ -229,7 +227,8 @@ class DedupPropSpec extends AnyFunSuite with BeforeAndAfterAll {
       .parquet(s"$dirPath/$p")
       .collect().map(_.toString).sorted.toSeq
     def part(tag: String, p: String) =
-      partAt(s"$tmpdir/graft_ingest_index/$key-$tag-v2", p)
+      partAt(graft.llm.IndexStore.path(graft.llm.IndexStore.Ingest, fp, tag)
+        .getPath, p)
     for (p <- Seq("bands", "pops", "tsets", "hashes")) {
       val (cmp, full) = (partAt(cmpDir, p), part("full", p))
       assert(cmp.nonEmpty && cmp == full,
@@ -264,11 +263,10 @@ class DedupPropSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = "/root/testdata/sf0.001"
     // d07's construction forces the build-if-missing.
     Dedup.queries("d07_keep_best")(spark, dir).collect()
-    val key = graft.llm.IndexStore.fingerprint(
+    val labels = graft.llm.IndexStore.path(graft.llm.IndexStore.Cluster,
       new java.io.File(s"$dir/documents.parquet"))
-    val tmpdir = sys.props.getOrElse("java.io.tmpdir", "/tmp")
     val idx = spark.read
-      .parquet(s"$tmpdir/graft_cluster_index/$key/labels")
+      .parquet(s"$labels/labels")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val fresh = Dedup.queries("d06_dup_clusters")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq

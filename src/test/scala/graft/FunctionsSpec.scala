@@ -52,10 +52,27 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("cosine_sim wrong arity raises analysis error") {
-    val e = intercept[AnalysisException] {
-      spark.sql("SELECT cosine_sim(array(CAST(1.0 AS FLOAT)))").head()
+    // Every injected function, called with one argument too few and one
+    // too many, names itself and its accepted argument counts.
+    val arities = Seq("cosine_sim" -> "2", "hyperplane_sig" -> "2",
+      "int_l2" -> "2", "ivf_argmin" -> "2", "tok_hashes" -> "1",
+      "inter_count" -> "2", "simhash16" -> "1", "shingle_hashes" -> "2",
+      "kll_quantile" -> "2 or 3", "kll_sketch" -> "1 or 2",
+      "mg_topk" -> "2")
+    for ((name, expected) <- arities) {
+      val counts = expected.split(" or ").map(_.toInt)
+      for (n <- Seq(counts.min - 1, counts.max + 1)) {
+        val args = Seq.fill(n)("array(CAST(1.0 AS FLOAT))").mkString(", ")
+        val e = intercept[AnalysisException] {
+          spark.sql(s"SELECT $name($args)").head()
+        }
+        assert(e.getMessage.toLowerCase.contains(name), s"$name/$n")
+        assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION" &&
+          e.getMessageParameters.get("expectedNum") == expected &&
+          e.getMessageParameters.get("actualNum") == n.toString,
+          s"$name/$n: ${e.getMessage}")
+      }
     }
-    assert(e.getMessage.toLowerCase.contains("cosine_sim"))
   }
 
   test("cosine_sim type mismatch raises analysis error") {

@@ -48,6 +48,9 @@ class ScalePlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def plan(name: String): String = planAt(sf1, name)
 
+  private val ingestRoot = graft.llm.IndexStore.Ingest.family
+  private val annDeltaRoot = graft.llm.IndexStore.AnnDelta.family
+
   private def planAt(dir: String, name: String): String = {
     val df = SparkEntry.queries(name)(spark, dir)
     df.queryExecution.executedPlan.toString()
@@ -247,7 +250,7 @@ class ScalePlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("sf1: d21 probes the materialized index segments, no corpus re-hash") {
     assume(sf1Present, "sf1 corpus absent (run graft.tools.ScaleUp)")
     val p = plan("d21_indexed_ingest")
-    assert("graft_ingest_index".r.findAllIn(p).size >= 3,
+    assert(ingestRoot.r.findAllIn(p).size >= 3,
       s"expected hashes/bands/tsets index scans at sf1:\n$p")
     // Every documents scan that reads `text` must carry the batch
     // filter (doc_id % 7 = 0) — the corpus side comes exclusively from
@@ -271,9 +274,9 @@ class ScalePlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // base+delta text segments (hashes/bands/tsets) + the ANN chain
     // (cents, cells_base, cells_delta) all come from materialized
     // artifacts.
-    assert("graft_ingest_index".r.findAllIn(p).size >= 6,
+    assert(ingestRoot.r.findAllIn(p).size >= 6,
       s"expected base+delta hashes/bands/tsets segment scans at sf1:\n$p")
-    assert("graft_ann_dindex".r.findAllIn(p).size >= 3,
+    assert(annDeltaRoot.r.findAllIn(p).size >= 3,
       s"expected cents/cells_base/cells_delta index scans at sf1:\n$p")
     // The only text hashing is the batch's — d21's rule, held by the
     // whole composite at 10×.

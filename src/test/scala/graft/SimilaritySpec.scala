@@ -30,14 +30,13 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     // the probe must see exactly what a full corpus pass would.
     graft.llm.Similarity
       .queries("v25b_hybrid_rrf_indexed")(spark, sf).collect()
-    val key = graft.llm.IndexStore.fingerprint(
+    val idx = graft.llm.IndexStore.path(graft.llm.IndexStore.Postings,
       new java.io.File(s"$sf/documents.parquet"))
-    val tmpdir = sys.props.getOrElse("java.io.tmpdir", "/tmp")
     // Round-12: postings carry an int32 token id; decoding through the
     // vocab table must reproduce the string-keyed rows exactly, and the
     // dictionary itself must be dense, unique, and df-consistent.
     val vocabDf = spark.read
-      .parquet(s"$tmpdir/graft_postings_index/$key/vocab")
+      .parquet(s"$idx/vocab")
     assert(vocabDf.schema("tid").dataType.typeName == "integer",
       "vocab tid is not int32")
     val vrows = vocabDf.collect()
@@ -47,7 +46,7 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(vrows.map(_.getAs[String]("tok")).distinct.length ==
       vrows.length, "duplicate tokens in vocab")
     val post = spark.read
-      .parquet(s"$tmpdir/graft_postings_index/$key/postings")
+      .parquet(s"$idx/postings")
       .join(vocabDf.select(col("tid"), col("tok"),
         col("df").as("vdf")), "tid")
       .withColumn("dfOk", col("df") === col("vdf"))
@@ -79,7 +78,7 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
       s"postings artifact diverges from direct recomputation " +
         s"(${postDecoded.size} vs ${direct.size} rows)")
     val stats = spark.read
-      .parquet(s"$tmpdir/graft_postings_index/$key/stats")
+      .parquet(s"$idx/stats")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val dstats = docs
       .agg(count(lit(1)).as("n"),

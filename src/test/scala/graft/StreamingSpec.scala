@@ -1051,17 +1051,16 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .queries("v25b_hybrid_rrf_indexed")(s, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getDouble(5))).toSeq
-    val tmpdir = sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    val pfp = graft.llm.IndexStore.fingerprint(
+    import graft.llm.IndexStore
+    val pidx = IndexStore.path(IndexStore.Postings,
       new java.io.File(s"$sf/documents.parquet"))
-    val afp = graft.llm.IndexStore.fingerprint(
+    val aidx = IndexStore.path(IndexStore.Ann,
       new java.io.File(s"$sf/embeddings.parquet"))
-    val postings = s.read
-      .parquet(s"$tmpdir/graft_postings_index/$pfp/postings")
-    val vocab = s.read.parquet(s"$tmpdir/graft_postings_index/$pfp/vocab")
-    val stats = s.read.parquet(s"$tmpdir/graft_postings_index/$pfp/stats")
-    val cents = s.read.parquet(s"$tmpdir/graft_ann_index/$afp-t2f/cents")
-    val cells = s.read.parquet(s"$tmpdir/graft_ann_index/$afp-t2f/cells")
+    val postings = s.read.parquet(s"$pidx/postings")
+    val vocab = s.read.parquet(s"$pidx/vocab")
+    val stats = s.read.parquet(s"$pidx/stats")
+    val cents = s.read.parquet(s"$aidx/cents")
+    val cells = s.read.parquet(s"$aidx/cells")
     val emb = Tables.load(s, sf, "embeddings")
     val nProbe = math.max(1L, math.round(
       math.round(math.sqrt(emb.count().toDouble)) / 4.0)).toInt
