@@ -1,6 +1,8 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -11,6 +13,9 @@ import scala.collection.mutable.ArrayBuffer
   * Runs each query once as warmup (JIT/codegen/artifact build), once
   * measured, and prints per-stage: wall time, executor run/cpu time,
   * shuffle read/write bytes, spill, task count, and the stage name.
+  * Also prints each run's Janino compile count and compile ms: with the
+  * JVM-wide codegen cache (see [[graft.GraftSession]]) the measured run
+  * compiles nothing, so a nonzero count there is a recompile regression.
   */
 object StageProfile {
   def main(args: Array[String]): Unit = {
@@ -37,20 +42,35 @@ object StageProfile {
       }
     }
 
+    /** Runs `body`; returns the classes it compiled and their compile ms. */
+    def compiles(body: => Unit): (Long, Double) = {
+      val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val ns0 = CodeGenerator.compileTime
+      body
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0,
+        (CodeGenerator.compileTime - ns0) / 1e6)
+    }
+
     args.foreach { q =>
       val fn = graft.SparkEntry.queries(q)
       // warmup: artifacts + JIT
       spark.catalog.clearCache()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      val (warmN, warmMs) = compiles {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      }
       stages.clear()
       spark.sparkContext.addSparkListener(listener)
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      val (runN, runMs) = compiles {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      }
       val sec = (System.nanoTime() - t0) / 1e9
       Thread.sleep(1500) // let the listener bus drain the final stage events
       spark.sparkContext.removeSparkListener(listener)
       println(f"== $q: $sec%.2f s, ${stages.size} stages ==")
+      println(f"  codegen: warmup compiled $warmN classes in $warmMs%.0f ms, " +
+        f"measured compiled $runN classes in $runMs%.0f ms")
       val tot = stages.map(_.wallMs).sum
       stages.sortBy(-_.wallMs).take(20).foreach { s =>
         println(f"  stage ${s.id}%4d wall=${s.wallMs}%6d ms (${100.0 * s.wallMs / math.max(tot, 1)}%4.1f%%) " +

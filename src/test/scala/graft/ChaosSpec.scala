@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -15,14 +14,11 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = org.apache.spark.sql.SparkSession.builder()
+    // Through GraftSession like every other spec: the codegen cache is
+    // JVM-wide and sized by the first session that generates code.
+    spark = GraftSession.builder(4, 4)
       .master("local[4,2]") // 2 task attempts: retry absorbs the fault
       .appName("graft-chaos")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .withExtensions(GraftExtensions.install)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
   }
