@@ -13,7 +13,7 @@ import org.scalatest.BeforeAndAfterAll
   * that order alone renamed, and so recompiled, its pipelines.
   *
   * The same order can also make AQE pick another join strategy or build
-  * side (v09 does in about one run in six). That is a different plan, and
+  * side (v09 did in 5 of 26 repeated runs). That is a different plan, and
   * its pipelines are new code, so a query's second run must compile
   * nothing exactly when its final adaptive plan repeats. Queries with a
   * varying plan in most runs (a01's distinct-group numbering, m05, v08)
