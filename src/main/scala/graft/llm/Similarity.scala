@@ -33,6 +33,17 @@ import graft.Tables
   *  - v07: the recall@k evaluation harness — exact top-k as ground truth
   *    vs the bucket-restricted answer at two bucket widths, the
   *    recall-vs-candidate-cost sweep used to size an LSH index.
+  *  - v08–v30: trained IVF, PQ, delta-append and compacted ANN indexes,
+  *    hybrid RRF and their recall audits (each entry carries its notes).
+  *
+  * The IVF/ANN entries share one filter-and-verify core (the "shared
+  * retrieval core" section): [[exactTruth]] (persisted exact top-5),
+  * [[probeCells]] (top-nProbe cells of a broadcast codebook, sized by
+  * [[nProbeFor]]), [[rerankCells]] (probed-cell exact cosine),
+  * [[recallHits]], [[ivfRecallLeg]] (v09/v17), [[heldOutTopK]] (the
+  * index probe of v18/v19/v19b/v25b) and [[rrfFuse]] (v25/v25b), over
+  * the integer IVF machinery ([[ivfQv]], [[ivfAssign]],
+  * [[twoLevelAssign]]).
   *
   * Cosine is the custom Catalyst expression `cosine_sim`
   * (graft.functions.CosineSimilarity, codegen'd); the DuckDB oracle
@@ -127,14 +138,19 @@ object Similarity {
     .repartition(e.sparkSession.sparkContext.defaultParallelism)
     .select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("ed"))
-    .withColumn("nrm", sqrt(aggregate(
-      zip_with(col("ed"), col("ed"), (x, w) => x * w),
-      lit(0.0), (acc, v) => acc + v)))
-    .select(col("vec_id"),
-      transform(col("ed"), x =>
-        when(col("nrm") === 0.0, lit(0L))
-          .otherwise(round(x / col("nrm") * 1000).cast("long")))
-        .as("qv"))
+    .withColumn("nrm", l2Norm(col("ed")))
+    .select(col("vec_id"), quantize(col("ed"), col("nrm")).as("qv"))
+
+  /** The L2 norm of a double array: one array-ordered fold, the same
+    * sequential arithmetic the cosine_sim oracle matches bit-for-bit. */
+  private[graft] def l2Norm(ed: Column): Column = sqrt(aggregate(
+    zip_with(ed, ed, (x, w) => x * w), lit(0.0), (acc, v) => acc + v))
+
+  /** round(x/||x||·1000) per element as int64 (0 for a zero vector).
+    * `nrm` is a column computed once per row, never inside the lambda. */
+  private[graft] def quantize(ed: Column, nrm: Column): Column =
+    transform(ed, x => when(nrm === 0.0, lit(0L))
+      .otherwise(round(x / nrm * 1000).cast("long")))
 
   /** Exact integer squared-L2 — the codegen'd [[graft.functions.
     * IntL2Dist]] native expression since round 15 (the former
@@ -316,6 +332,149 @@ object Similarity {
       .filter(col("cid").isNotNull)
   }
 
+  // ---- Shared retrieval core: exact truth, cell probe, re-rank, recall ----
+  // Every IVF harness and serving probe is filter-and-verify: rank the
+  // codebook cells per query ([[probeCells]]), verify the probed cells'
+  // members by exact cosine ([[rerankCells]]), and grade the approximate
+  // top 5 against the exact one ([[exactTruth]], [[recallHits]]).
+
+  /** The held-out query slice (vec_id 100..119) the IVF harnesses and
+    * serving probes grade: disjoint from the first-16 codebook anchors. */
+  private val HeldOut: Column = col("vec_id") >= 100 && col("vec_id") < 120
+
+  /** Per-query cosine rank order (sim desc, c_id ties). */
+  private val bySim = Window.partitionBy(col("q_id"))
+    .orderBy(col("sim").desc, col("c_id"))
+
+  /** Per-query cell rank order (exact integer L2, cid ties). */
+  private val byDist = Window.partitionBy(col("q_id"))
+    .orderBy(col("dist"), col("cid"))
+
+  /** (q_id, q_emb) of the queries selected by `isQuery`. */
+  private def queryEmb(e: DataFrame, isQuery: Column): DataFrame =
+    e.filter(isQuery)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+
+  /** (c_id, c_emb): the corpus as re-rank candidates. */
+  private def corpusEmb(e: DataFrame): DataFrame =
+    e.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
+
+  /** K = round(√n): the IVF codebook size for an n-row corpus. */
+  private[graft] def ivfK(n: Long): Int =
+    math.round(math.sqrt(n.toDouble)).toInt
+
+  /** nProbe = round(K/4), at least 1, with K = [[ivfK]](n) — about a
+    * quarter of the corpus per query. `n` is the row count the codebook
+    * trained on, never the surviving centroid count: a Lloyd round can
+    * empty a cell, and the oracle sizes from N, so sizing from survivors
+    * would probe a different cell count on any corpus that empties one. */
+  private[graft] def nProbeFor(n: Long): Int =
+    math.max(1L, math.round(ivfK(n) / 4.0)).toInt
+
+  /** Exact top-5 cosine truth (q_id, c_id) for the queries selected by
+    * `isQuery`. Persisted: the |Q|×|N| broadcast NLJ of codegen cosines
+    * plus a per-query window feeds every leg and report branch of its
+    * harness, so its ~|Q|·5 rows compute once. */
+  private[graft] def exactTruth(e: DataFrame, isQuery: Column): DataFrame =
+    queryEmb(e, isQuery).join(corpusEmb(e), col("q_id") =!= col("c_id"))
+      .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
+      .withColumn("rnk", row_number().over(bySim))
+      .filter(col("rnk") <= 5)
+      .select(col("q_id"), col("c_id"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Every codebook cell ranked per query vector (vec_id, qv): the
+    * codebook broadcasts, so the work is |Q|×K. Adds (q_id, cid, cv,
+    * dist, prn); `prn` is the rank expression. */
+  private def rankCells(q: DataFrame, cents: DataFrame,
+                        prn: Column = row_number().over(byDist)): DataFrame =
+    q.select(col("vec_id").as("q_id"), col("qv"))
+      .crossJoin(broadcast(cents))
+      .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
+      .withColumn("prn", prn)
+
+  /** Top-nProbe cell probe: (q_id, p_cell) for each query vector. */
+  private[graft] def probeCells(q: DataFrame, cents: DataFrame,
+                                nProbe: Int): DataFrame =
+    rankCells(q, cents).filter(col("prn") <= nProbe)
+      .select(col("q_id"), col("cid").as("p_cell"))
+
+  /** Probed-cell cosine re-rank candidates: each query (`qe`) against
+    * the members of its probed cells, itself excluded, with exact
+    * cosine `sim`. `cEmb` re-attaches c_emb when `cells` lacks it. */
+  private[graft] def rerankCells(probes: DataFrame, qe: DataFrame,
+      cells: DataFrame, cEmb: Option[DataFrame] = None): DataFrame = {
+    val cand = probes.join(qe, "q_id")
+      .join(cells, col("p_cell") === col("c_cell") &&
+        col("q_id") =!= col("c_id"))
+    cEmb.fold(cand)(cand.join(_, "c_id"))
+      .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
+  }
+
+  /** Recall hit count: how many of each query's `truth` rows (q_id,
+    * c_id) the approximate answer `approx` recovered, as column `name`. */
+  private[graft] def recallHits(truth: DataFrame, approx: DataFrame,
+                                name: String): DataFrame =
+    truth.join(approx.select(col("q_id"), col("c_id"), lit(1L).as("hit")),
+        Seq("q_id", "c_id"), "left_outer")
+      .groupBy(col("q_id")).agg(count(col("hit")).as(name))
+
+  /** One IVF recall leg (v09, v17): assign the corpus to `cents`' cells,
+    * probe each held-out query's top-nProbe cells, exact-cosine re-rank,
+    * and score the top 5 against `truth`. Columns (q_id, hits_`sfx`,
+    * n_cand_`sfx`, recall_`sfx`). */
+  private[graft] def ivfRecallLeg(e: DataFrame, qvAll: DataFrame,
+      truth: DataFrame, cents: DataFrame, nProbe: Int,
+      sfx: String): DataFrame = {
+    val cells = ivfAssign(qvAll, cents)
+      .select(col("vec_id").as("c_id"), col("cid").as("c_cell"))
+      .join(corpusEmb(e), "c_id")
+    val reranked = rerankCells(
+        probeCells(qvAll.filter(HeldOut), cents, nProbe),
+        queryEmb(e, HeldOut), cells)
+      .withColumn("rnk", row_number().over(bySim))
+    val nCand = reranked.groupBy(col("q_id"))
+      .agg(count(lit(1)).as(s"n_cand_$sfx"))
+    recallHits(truth, reranked.filter(col("rnk") <= 5), s"hits_$sfx")
+      .join(nCand, "q_id")
+      .withColumn(s"recall_$sfx", col(s"hits_$sfx").cast("double") / 5.0)
+  }
+
+  /** The held-out probe body over an index's `cents` and `cells` (v18,
+    * v25b, v19, v19b): quantize ONLY the |Q| held-out queries, probe
+    * [[nProbeFor]](n) cells, exact-cosine re-rank and keep each query's
+    * top k (rnk as long). The plan holds no training and no corpus
+    * quantization pass. */
+  private def heldOutTopK(e: DataFrame, cents: DataFrame, cells: DataFrame,
+      n: Long, k: Int, cEmb: Option[DataFrame] = None): DataFrame =
+    rerankCells(probeCells(ivfQv(e.filter(HeldOut)), cents, nProbeFor(n)),
+        queryEmb(e, HeldOut), cells, cEmb)
+      .withColumn("rnk", row_number().over(bySim).cast("long"))
+      .filter(col("rnk") <= k)
+
+  /** Reciprocal-rank fusion (k = 60) of a lexical (q_id, c_id, r_lex)
+    * and a vector (q_id, c_id, r_vec) shortlist, shared by v25 and v25b:
+    * a |Q|-bounded full-outer join scored 1/(60+r_lex) + 1/(60+r_vec)
+    * (absent rank ⇒ 0; two exact-int double divisions added in fixed
+    * literal order, so both engines produce identical bits), top 10 per
+    * query by (rrf desc, c_id). */
+  private def rrfFuse(lex: DataFrame, vec: DataFrame): DataFrame = {
+    val wf = Window.partitionBy(col("q_id"))
+      .orderBy(col("rrf").desc, col("c_id"))
+    lex.join(vec, Seq("q_id", "c_id"), "full_outer")
+      .withColumn("rrf",
+        when(col("r_lex").isNotNull,
+          lit(1.0) / (lit(60.0) + col("r_lex"))).otherwise(lit(0.0)) +
+        when(col("r_vec").isNotNull,
+          lit(1.0) / (lit(60.0) + col("r_vec"))).otherwise(lit(0.0)))
+      .withColumn("rnk", row_number().over(wf).cast("long"))
+      .filter(col("rnk") <= 10)
+      .select(col("q_id"), col("rnk"), col("c_id"),
+        coalesce(col("r_lex"), lit(0L)).as("r_lex"),
+        coalesce(col("r_vec"), lit(0L)).as("r_vec"), col("rrf"))
+      .orderBy(col("q_id"), col("rnk"))
+  }
+
   /** Pre-materialized ANN index — v18's engine and the v-family twin of
     * d21's ingest index: the √N spherical-Lloyd codebook (v17's
     * production sizing, T=3) and the corpus cell assignment are trained
@@ -333,8 +492,7 @@ object Similarity {
     IndexStore.ensureBuilt(base) { tmp =>
       val qvAll = ivfQv(Tables.load(s, dir, "embeddings"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val n = qvAll.count()
-      val k = math.round(math.sqrt(n.toDouble)).toInt
+      val k = ivfK(qvAll.count())
       // Codebook trains on the bounded 256·K sample; the full corpus
       // is assigned ONCE below (the "cells" write) — via the two-level
       // route, ~2·N·√K distance evals instead of the flat N·K.
@@ -372,50 +530,20 @@ object Similarity {
     }
   }
 
-  /** v18's probe body, parameterized on shortlist depth k — shared by
-    * v18 (k = 5) and v25b's vector shortlist (k = 20): quantize ONLY
-    * the |Q| probe vectors (vec_id ∈ [100, 120)), walk the
-    * materialized codebook (broadcast) → probed cells (index scan) →
-    * exact cosine re-rank. The plan contains no training and no corpus
-    * quantization pass. Returns (q_id, c_id, rnk, sim), rnk ≤ k,
-    * unordered. */
+  /** v18's probe body over the full-corpus index, parameterized on
+    * shortlist depth k — shared by v18 (k = 5) and v25b's vector
+    * shortlist (k = 20): [[heldOutTopK]] over the materialized codebook
+    * (broadcast) and cells (index scan), sized from the corpus row count
+    * (parquet metadata only, no data scan). The cells carry no
+    * embedding, so c_emb re-attaches after the probe. Returns (q_id,
+    * c_id, rnk, sim), rnk ≤ k, unordered. */
   private def indexedAnnShortlist(s: SparkSession, dir: String,
                                   k: Int): DataFrame = {
     val idx = ensureAnnIndex(s, dir)
     val cents = s.read.parquet(s"$idx/cents")
     val cells = s.read.parquet(s"$idx/cells")
     val e = Tables.load(s, dir, "embeddings")
-    // nProbe derives from the corpus row count (round(√N)/4), NOT
-    // from cents.count(): a Lloyd round can empty a cell, shrinking
-    // the post-training centroid count below round(√N) — the oracle
-    // and v17 size probes from N, so sizing from the survivor count
-    // would silently diverge on any corpus that empties a cell. The
-    // count is parquet-metadata-only (no data scan).
-    val nEmb = e.count()
-    val kSz = math.round(math.sqrt(nEmb.toDouble))
-    val nProbe = math.max(1L, math.round(kSz / 4.0)).toInt
-    val isQuery = col("vec_id") >= 100 && col("vec_id") < 120
-    val qe = e.filter(isQuery)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("cid"))
-    val probes = ivfQv(e.filter(isQuery))
-      .select(col("vec_id").as("q_id"), col("qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
-      .withColumn("prn", row_number().over(wp))
-      .filter(col("prn") <= nProbe)
-      .select(col("q_id"), col("cid").as("p_cell"))
-    val wr = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("c_id"))
-    probes.join(qe, "q_id")
-      .join(cells, col("p_cell") === col("c_cell") &&
-        col("q_id") =!= col("c_id"))
-      .join(e.select(col("vec_id").as("c_id"),
-        col("embedding").as("c_emb")), "c_id")
-      .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-      .withColumn("rnk", row_number().over(wr).cast("long"))
-      .filter(col("rnk") <= k)
+    heldOutTopK(e, cents, cells, e.count(), k, Some(corpusEmb(e)))
       .select(col("q_id"), col("c_id"), col("rnk"), col("sim"))
   }
 
@@ -441,8 +569,7 @@ object Similarity {
       val qvAll = ivfQv(Tables.load(s, dir, "embeddings"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       val baseQv = qvAll.filter(basePred)
-      val n = baseQv.count()
-      val k = math.round(math.sqrt(n.toDouble)).toInt
+      val k = ivfK(baseQv.count())
       ivfTrainSampled(baseQv, k, 3)
         .write.mode("overwrite")
         .parquet(new java.io.File(tmp, "cents").getPath)
@@ -531,13 +658,9 @@ object Similarity {
     * ingest job runs per new document. Index slices follow d23's
     * ingest-day convention (base = day ∉ {0, 3}, delta = day 3), so
     * the probing batch (day 0) is NOT in the index — unlike v19,
-    * where the batch IS yesterday's appended delta. Probe sizing
-    * follows v18/v19's N-derived rule (K = round(√N_base), nProbe =
-    * K/4) — NOT the surviving-centroid count: a Lloyd round can empty
-    * a cell, shrinking |cents| below round(√N), and the DuckDB oracle
-    * (annServeCtes pSql) sizes from the base count — counting
-    * survivors would silently probe a different cell count on any
-    * corpus that empties a cell. The count is a pushed-filter scan of
+    * where the batch IS yesterday's appended delta. Probes size by
+    * [[nProbeFor]] over the base count, as the DuckDB oracle
+    * (annServeCtes pSql) does; the count is a pushed-filter scan of
     * one int column, not a corpus read. */
   private[graft] def annNearestIndexed(s: SparkSession,
                                        dir: String): DataFrame = {
@@ -549,23 +672,10 @@ object Similarity {
       .withColumn("seg", lit("base"))
       .unionByName(s.read.parquet(s"$idx/cells_delta")
         .withColumn("seg", lit("delta")))
-    val nBase = Tables.load(s, dir, "embeddings")
-      .filter(col("vec_id") % 7 =!= 0 && col("vec_id") % 7 =!= 3).count()
-    val kSz = math.round(math.sqrt(nBase.toDouble))
-    val nProbe = math.max(1L, math.round(kSz / 4.0)).toInt
+    val nProbe = nProbeFor(Tables.load(s, dir, "embeddings")
+      .filter(col("vec_id") % 7 =!= 0 && col("vec_id") % 7 =!= 3).count())
     val isProbe = col("vec_id") % 7 === 0
     val e = Tables.load(s, dir, "embeddings")
-    val qe = e.filter(isProbe)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("cid"))
-    val probes = ivfQv(e.filter(isProbe))
-      .select(col("vec_id").as("q_id"), col("qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
-      .withColumn("prn", row_number().over(wp))
-      .filter(col("prn") <= nProbe)
-      .select(col("q_id"), col("cid").as("p_cell"))
     // Top-1 as a struct-MIN AGGREGATE, not a row_number window (the
     // ivfAssign lesson at the serving grain — round 12, found at the
     // sf10 leg): this probe side is the BATCH (N/7 queries), so the
@@ -580,10 +690,8 @@ object Similarity {
     // c_emb comes OFF THE CELLS ARTIFACT (denormalized at build — see
     // ensureAnnDeltaIndexWhere): no post-fan-out join, so nothing ever
     // sorts the candidate stream.
-    probes.join(qe, "q_id")
-      .join(cells, col("p_cell") === col("c_cell") &&
-        col("q_id") =!= col("c_id"))
-      .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
+    rerankCells(probeCells(ivfQv(e.filter(isProbe)), cents, nProbe),
+        queryEmb(e, isProbe), cells)
       .groupBy(col("q_id"))
       .agg(min(struct((-col("sim")).as("nsim"), col("c_id"),
         col("sim"), col("seg"))).as("best"))
@@ -614,34 +722,12 @@ object Similarity {
           .withColumn("seg", lit("delta")))
       val e = Tables.load(s, dir, "embeddings")
       // K and nProbe size from the BASE row count (what the codebook
-      // was trained on), mirroring v18's N-derived sizing rule; the
-      // count is a pushed-filter scan of one int column.
+      // was trained on); the count is a pushed-filter scan of one int
+      // column. c_emb rides the cells artifact (denormalized at build;
+      // see ensureAnnDeltaIndexWhere): the exact re-rank needs no
+      // per-candidate embedding re-attach join.
       val nBase = e.filter(col("vec_id") % 7 =!= 0).count()
-      val kSz = math.round(math.sqrt(nBase.toDouble))
-      val nProbe = math.max(1L, math.round(kSz / 4.0)).toInt
-      val isQuery = col("vec_id") >= 100 && col("vec_id") < 120
-      val qe = e.filter(isQuery)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wp = Window.partitionBy(col("q_id"))
-        .orderBy(col("dist"), col("cid"))
-      val probes = ivfQv(e.filter(isQuery))
-        .select(col("vec_id").as("q_id"), col("qv"))
-        .crossJoin(broadcast(cents))
-        .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
-        .withColumn("prn", row_number().over(wp))
-        .filter(col("prn") <= nProbe)
-        .select(col("q_id"), col("cid").as("p_cell"))
-      val wr = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      // c_emb rides the cells artifact (round 12 — denormalized at
-      // build; see ensureAnnDeltaIndexWhere): the exact re-rank needs
-      // no per-candidate embedding re-attach join.
-      probes.join(qe, "q_id")
-        .join(cells, col("p_cell") === col("c_cell") &&
-          col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wr).cast("long"))
-        .filter(col("rnk") <= 5)
+      heldOutTopK(e, cents, cells, nBase, 5)
         .select(col("q_id"), col("c_id"), col("rnk"), col("sim"),
           col("seg"))
         .orderBy(col("q_id"), col("rnk"))
@@ -673,28 +759,7 @@ object Similarity {
       val cells = s.read.parquet(s"$cmp/cells")
       val e = Tables.load(s, dir, "embeddings")
       val nBase = e.filter(col("vec_id") % 7 =!= 0).count()
-      val kSz = math.round(math.sqrt(nBase.toDouble))
-      val nProbe = math.max(1L, math.round(kSz / 4.0)).toInt
-      val isQuery = col("vec_id") >= 100 && col("vec_id") < 120
-      val qe = e.filter(isQuery)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wp = Window.partitionBy(col("q_id"))
-        .orderBy(col("dist"), col("cid"))
-      val probes = ivfQv(e.filter(isQuery))
-        .select(col("vec_id").as("q_id"), col("qv"))
-        .crossJoin(broadcast(cents))
-        .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
-        .withColumn("prn", row_number().over(wp))
-        .filter(col("prn") <= nProbe)
-        .select(col("q_id"), col("cid").as("p_cell"))
-      val wr = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      probes.join(qe, "q_id")
-        .join(cells, col("p_cell") === col("c_cell") &&
-          col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wr).cast("long"))
-        .filter(col("rnk") <= 5)
+      heldOutTopK(e, cents, cells, nBase, 5)
         .select(col("q_id"), col("c_id"), col("rnk"), col("sim"))
         .orderBy(col("q_id"), col("rnk"))
     },
@@ -718,20 +783,14 @@ object Similarity {
       val approx = queries("v19_delta_ann")(s, dir)
         .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
       val e = Tables.load(s, dir, "embeddings")
-      val isQuery = col("vec_id") >= 100 && col("vec_id") < 120
-      val q = e.filter(isQuery)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val c = e.select(col("vec_id").as("c_id"),
-        col("embedding").as("c_emb"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
       // The 20-query slice is the BUILD side, explicitly: at test SF
       // the unfiltered corpus estimates smaller than the range-filtered
       // slice and Catalyst would broadcast the corpus — exactly the
       // side that grows 100× at scale.
-      val truth = broadcast(q).join(c, col("q_id") =!= col("c_id"))
+      val truth = broadcast(queryEmb(e, HeldOut))
+        .join(corpusEmb(e), col("q_id") =!= col("c_id"))
         .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(w))
+        .withColumn("rnk", row_number().over(bySim))
         .filter(col("rnk") <= 5)
         .select(col("q_id"), col("c_id"),
           when(col("c_id") % 7 === 0, 1L).otherwise(0L).as("is_delta"))
@@ -822,14 +881,7 @@ object Similarity {
         // (ids, code) rows instead (pqEncode note).
         .persist(StorageLevel.MEMORY_AND_DISK)
       // Held-out queries: top-4 cells, per-cell residual distance table.
-      val isQ = col("vec_id") >= 100 && col("vec_id") < 120
-      val wp = Window.partitionBy(col("q_id"))
-        .orderBy(col("dist"), col("cid"))
-      val probes = qvAll.filter(isQ)
-        .select(col("vec_id").as("q_id"), col("qv"))
-        .crossJoin(broadcast(cents))
-        .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
-        .withColumn("prn", row_number().over(wp))
+      val probes = rankCells(qvAll.filter(HeldOut), cents)
         .filter(col("prn") <= 4)
         .select(col("q_id"), col("qv"), col("cid").as("p_cell"),
           col("cv"))
@@ -850,39 +902,19 @@ object Similarity {
         .orderBy(col("adc_dist"), col("vec_id"))
       val short = adc.withColumn("rn", row_number().over(wa))
         .filter(col("rn") <= PqShortlist)
-      val top5 = short.filter(col("rn") <= 5)
-        .select(col("q_id"), col("vec_id").as("c_id"), lit(1L).as("hit"))
-      val qe = e.filter(isQ)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wt = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      val truth = qe
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wt))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("c_id"))
-        // Round 16: the exact-truth subtree (a |Q|x|N| broadcast NLJ of
-        // codegen cosines + a per-query window) feeds every leg/report
-        // branch — persist the ~|Q|*5 rows so it computes once.
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val truth = exactTruth(e, HeldOut)
       val rr5 = short
         .select(col("q_id"), col("vec_id").as("c_id"))
-        .join(qe, "q_id")
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), "c_id")
+        .join(queryEmb(e, HeldOut), "q_id")
+        .join(corpusEmb(e), "c_id")
         .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rrk", row_number().over(wt))
+        .withColumn("rrk", row_number().over(bySim))
         .filter(col("rrk") <= 5)
-        .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
       val ncand = adc.groupBy(col("q_id"))
         .agg(count(lit(1)).as("n_cand"))
-      val hits = truth.join(top5, Seq("q_id", "c_id"), "left_outer")
-        .groupBy(col("q_id")).agg(count(col("hit")).as("hits_adc"))
-      val hitsRr = truth.join(rr5, Seq("q_id", "c_id"), "left_outer")
-        .groupBy(col("q_id")).agg(count(col("hit")).as("hits_rr"))
-      ncand.join(hits, "q_id").join(hitsRr, "q_id")
+      val hits = recallHits(truth, short.filter(col("rn") <= 5)
+        .select(col("q_id"), col("vec_id").as("c_id")), "hits_adc")
+      ncand.join(hits, "q_id").join(recallHits(truth, rr5, "hits_rr"), "q_id")
         .select(col("q_id"), col("n_cand"), col("hits_adc"),
           (col("hits_adc").cast("double") / 5.0).as("recall_adc"),
           col("hits_rr"),
@@ -892,14 +924,10 @@ object Similarity {
 
     "v01_knn_brute" -> { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val c = e.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      q.join(c, col("q_id") =!= col("c_id"))
+      queryEmb(e, col("vec_id") < 20)
+        .join(corpusEmb(e), col("q_id") =!= col("c_id"))
         .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(w).cast("long"))
+        .withColumn("rnk", row_number().over(bySim).cast("long"))
         .filter(col("rnk") <= 5)
         .select(col("q_id"), col("c_id"), col("rnk"), col("sim"))
         .orderBy(col("q_id"), col("rnk"))
@@ -912,12 +940,10 @@ object Similarity {
           col("bucket"))
       val c = e.select(col("vec_id").as("c_id"),
         col("embedding").as("c_emb"), col("bucket").as("cbucket"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
       q.join(c, col("bucket") === col("cbucket") &&
           col("q_id") =!= col("c_id"))
         .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(w).cast("long"))
+        .withColumn("rnk", row_number().over(bySim).cast("long"))
         .filter(col("rnk") <= 3)
         .select(col("q_id"), col("c_id"), col("rnk"), col("sim"))
         .orderBy(col("q_id"), col("rnk"))
@@ -946,12 +972,10 @@ object Similarity {
           col("cent_id").as("q_cell"))
       val c = assigned.select(col("vec_id").as("c_id"),
         col("embedding").as("c_emb"), col("cent_id").as("c_cell"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
       q.join(c, col("q_cell") === col("c_cell") &&
           col("q_id") =!= col("c_id"))
         .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(w).cast("long"))
+        .withColumn("rnk", row_number().over(bySim).cast("long"))
         .filter(col("rnk") <= 3)
         .select(col("q_id"), col("c_id"), col("rnk"), col("sim"))
         .orderBy(col("q_id"), col("rnk"))
@@ -975,12 +999,10 @@ object Similarity {
           col("label"))
       val c = e.select(col("vec_id").as("c_id"),
         col("embedding").as("c_emb"), col("label").as("clabel"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
       q.join(c, col("label") === col("clabel") &&
           col("q_id") =!= col("c_id"))
         .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(w).cast("long"))
+        .withColumn("rnk", row_number().over(bySim).cast("long"))
         .filter(col("rnk") <= 3)
         .select(col("q_id"), col("label").cast("long").as("label"),
           col("c_id"), col("rnk"), col("sim"))
@@ -1043,22 +1065,16 @@ object Similarity {
       val c = eb.select(col("vec_id").as("c_id"),
         col("embedding").as("c_emb"), col("bucket").as("cb"),
         col("bucket2").as("cb2"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
       def approx(cond: Column): DataFrame =
         q.join(c, cond && col("q_id") =!= col("c_id"))
           .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-          .withColumn("rnk", row_number().over(w))
+          .withColumn("rnk", row_number().over(bySim))
           .filter(col("rnk") <= 5)
-          .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
       val truth = queries("v01_knn_brute")(s, dir)
         .select(col("q_id"), col("c_id"))
-      def hits(a: DataFrame, n: String): DataFrame =
-        truth.join(a, Seq("q_id", "c_id"), "left_outer")
-          .groupBy(col("q_id")).agg(count(col("hit")).as(n))
-      hits(approx(col("bucket") === col("cb")), "hits_4bit")
-        .join(hits(approx(col("bucket2") === col("cb2")), "hits_2bit"),
-          "q_id")
+      recallHits(truth, approx(col("bucket") === col("cb")), "hits_4bit")
+        .join(recallHits(truth, approx(col("bucket2") === col("cb2")),
+          "hits_2bit"), "q_id")
         .withColumn("recall_4bit", col("hits_4bit").cast("double") / 5.0)
         .withColumn("recall_2bit", col("hits_2bit").cast("double") / 5.0)
         .orderBy(col("q_id"))
@@ -1096,29 +1112,22 @@ object Similarity {
         .filter(col("crn") === 1)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
           col("cent_id").as("c_cell"))
-      val q = e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       val wp = Window.partitionBy(col("q_id"))
         .orderBy(col("csim").desc, col("cent_id"))
-      val probes = q.crossJoin(broadcast(cents))
+      val probes = queryEmb(e, col("vec_id") < 20).crossJoin(broadcast(cents))
         .withColumn("csim", expr("cosine_sim(q_emb, cent_emb)"))
         .withColumn("prn", row_number().over(wp))
         .filter(col("prn") <= 4)
         .select(col("q_id"), col("q_emb"), col("cent_id").as("p_cell"))
-      val wr = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
       val reranked = probes.join(assigned,
           col("p_cell") === col("c_cell") && col("q_id") =!= col("c_id"))
         .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wr))
+        .withColumn("rnk", row_number().over(bySim))
       val nCand = reranked.groupBy(col("q_id"))
         .agg(count(lit(1)).as("n_cand"))
-      val top5 = reranked.filter(col("rnk") <= 5)
-        .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
       val truth = queries("v01_knn_brute")(s, dir)
         .select(col("q_id"), col("c_id"))
-      truth.join(top5, Seq("q_id", "c_id"), "left_outer")
-        .groupBy(col("q_id")).agg(count(col("hit")).as("hits_ivf"))
+      recallHits(truth, reranked.filter(col("rnk") <= 5), "hits_ivf")
         .join(nCand, "q_id")
         .withColumn("recall_ivf", col("hits_ivf").cast("double") / 5.0)
         .select(col("q_id"), col("n_cand"), col("hits_ivf"),
@@ -1165,58 +1174,11 @@ object Similarity {
       val trained = ivfTrain(qvAll, ivfSeed(qvAll, 16), 2)
       val fixed = qvAll.filter(col("vec_id") < 16)
         .select(col("vec_id").as("cid"), col("qv").as("cv"))
-      // Held-out queries: disjoint from both codebooks' anchor/seed space.
-      val isQuery = col("vec_id") >= 100 && col("vec_id") < 120
-      val qe = e.filter(isQuery)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      // Exact top-5 ground truth for the held-out queries.
-      val wt = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      val truth = qe
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wt))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("c_id"))
-        // Round 16: the exact-truth subtree (a |Q|x|N| broadcast NLJ of
-        // codegen cosines + a per-query window) feeds every leg/report
-        // branch — persist the ~|Q|*5 rows so it computes once.
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // One IVF leg = assign corpus to this codebook's cells, probe the
-      // query's top-4 cells, exact-cosine re-rank, score vs truth.
-      def leg(cents: DataFrame, sfx: String): DataFrame = {
-        val cells = ivfAssign(qvAll, cents)
-          .select(col("vec_id").as("c_id"), col("cid").as("c_cell"))
-          .join(e.select(col("vec_id").as("c_id"),
-            col("embedding").as("c_emb")), "c_id")
-        val wp = Window.partitionBy(col("q_id"))
-          .orderBy(col("dist"), col("cid"))
-        val probes = qvAll.filter(isQuery)
-          .select(col("vec_id").as("q_id"), col("qv"))
-          .crossJoin(broadcast(cents))
-          .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
-          .withColumn("prn", row_number().over(wp))
-          .filter(col("prn") <= 4)
-          .select(col("q_id"), col("cid").as("p_cell"))
-        val wr = Window.partitionBy(col("q_id"))
-          .orderBy(col("sim").desc, col("c_id"))
-        val reranked = probes.join(qe, "q_id")
-          .join(cells,
-            col("p_cell") === col("c_cell") && col("q_id") =!= col("c_id"))
-          .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-          .withColumn("rnk", row_number().over(wr))
-        val nCand = reranked.groupBy(col("q_id"))
-          .agg(count(lit(1)).as(s"n_cand_$sfx"))
-        val top5 = reranked.filter(col("rnk") <= 5)
-          .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
-        truth.join(top5, Seq("q_id", "c_id"), "left_outer")
-          .groupBy(col("q_id")).agg(count(col("hit")).as(s"hits_$sfx"))
-          .join(nCand, "q_id")
-          .withColumn(s"recall_$sfx",
-            col(s"hits_$sfx").cast("double") / 5.0)
-      }
-      leg(fixed, "fx").join(leg(trained, "tr"), "q_id")
+      // Held-out queries: disjoint from both codebooks' anchor/seed
+      // space. Each leg probes its codebook's top-4 cells.
+      val truth = exactTruth(e, HeldOut)
+      ivfRecallLeg(e, qvAll, truth, fixed, 4, "fx")
+        .join(ivfRecallLeg(e, qvAll, truth, trained, 4, "tr"), "q_id")
         .select(col("q_id"), col("n_cand_fx"), col("hits_fx"),
           col("recall_fx"), col("n_cand_tr"), col("hits_tr"),
           col("recall_tr"))
@@ -1248,58 +1210,11 @@ object Similarity {
       // Feeds the count, the training sample, final assigns + probes.
       val qvAll = ivfQv(e).persist(StorageLevel.MEMORY_AND_DISK)
       val n = qvAll.count()
-      val kSq = math.round(math.sqrt(n.toDouble)).toInt
-      val probeSq = math.max(1L, math.round(kSq / 4.0)).toInt
       val c16 = ivfTrain(qvAll, ivfSeed(qvAll, 16), 2)
-      val csq = ivfTrainSampled(qvAll, kSq, 3)
-      val isQuery = col("vec_id") >= 100 && col("vec_id") < 120
-      val qe = e.filter(isQuery)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wt = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      val truth = qe
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wt))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("c_id"))
-        // Round 16: the exact-truth subtree (a |Q|x|N| broadcast NLJ of
-        // codegen cosines + a per-query window) feeds every leg/report
-        // branch — persist the ~|Q|*5 rows so it computes once.
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      def leg(cents: DataFrame, nProbe: Int, sfx: String): DataFrame = {
-        val cells = ivfAssign(qvAll, cents)
-          .select(col("vec_id").as("c_id"), col("cid").as("c_cell"))
-          .join(e.select(col("vec_id").as("c_id"),
-            col("embedding").as("c_emb")), "c_id")
-        val wp = Window.partitionBy(col("q_id"))
-          .orderBy(col("dist"), col("cid"))
-        val probes = qvAll.filter(isQuery)
-          .select(col("vec_id").as("q_id"), col("qv"))
-          .crossJoin(broadcast(cents))
-          .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
-          .withColumn("prn", row_number().over(wp))
-          .filter(col("prn") <= nProbe)
-          .select(col("q_id"), col("cid").as("p_cell"))
-        val wr = Window.partitionBy(col("q_id"))
-          .orderBy(col("sim").desc, col("c_id"))
-        val reranked = probes.join(qe, "q_id")
-          .join(cells,
-            col("p_cell") === col("c_cell") && col("q_id") =!= col("c_id"))
-          .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-          .withColumn("rnk", row_number().over(wr))
-        val nCand = reranked.groupBy(col("q_id"))
-          .agg(count(lit(1)).as(s"n_cand_$sfx"))
-        val top5 = reranked.filter(col("rnk") <= 5)
-          .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
-        truth.join(top5, Seq("q_id", "c_id"), "left_outer")
-          .groupBy(col("q_id")).agg(count(col("hit")).as(s"hits_$sfx"))
-          .join(nCand, "q_id")
-          .withColumn(s"recall_$sfx",
-            col(s"hits_$sfx").cast("double") / 5.0)
-      }
-      leg(c16, 4, "16").join(leg(csq, probeSq, "sq"), "q_id")
+      val csq = ivfTrainSampled(qvAll, ivfK(n), 3)
+      val truth = exactTruth(e, HeldOut)
+      val sq = ivfRecallLeg(e, qvAll, truth, csq, nProbeFor(n), "sq")
+      ivfRecallLeg(e, qvAll, truth, c16, 4, "16").join(sq, "q_id")
         .select(col("q_id"), col("n_cand_16"), col("hits_16"),
           col("recall_16"), col("n_cand_sq"), col("hits_sq"),
           col("recall_sq"))
@@ -1352,8 +1267,7 @@ object Similarity {
       // integer ADC mass of the chosen 5 (adds hash signal beyond the
       // hit count).
       val (_, subs, cb, codes) = pqEncode(s, dir)
-      val isQ = col("vec_id") >= 100 && col("vec_id") < 120
-      val qsubs = subs.filter(isQ)
+      val qsubs = subs.filter(HeldOut)
         .select(col("vec_id").as("q_id"), col("m"), col("sub").as("qsub"))
       val dtab = qsubs.join(broadcast(cb), "m")
         .select(col("q_id"), col("m"), col("code"),
@@ -1368,41 +1282,21 @@ object Similarity {
         .filter(col("rn") <= PqShortlist)
       val top5 = short.filter(col("rn") <= 5)
       val e = Tables.load(s, dir, "embeddings")
-      val qe = e.filter(isQ)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wt = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      val truth = qe
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wt))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("c_id"))
-        // Round 16: the exact-truth subtree (a |Q|x|N| broadcast NLJ of
-        // codegen cosines + a per-query window) feeds every leg/report
-        // branch — persist the ~|Q|*5 rows so it computes once.
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val truth = exactTruth(e, HeldOut)
       // Exact-cosine re-rank of the ADC shortlist — the second half of
       // the production PQ pipeline: the code scan prunes the corpus to
       // PqShortlist rows per query, and only those touch float payloads.
       val rr5 = short
         .select(col("q_id"), col("vec_id").as("c_id"))
-        .join(qe, "q_id")
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), "c_id")
+        .join(queryEmb(e, HeldOut), "q_id")
+        .join(corpusEmb(e), "c_id")
         .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rrk", row_number().over(wt))
+        .withColumn("rrk", row_number().over(bySim))
         .filter(col("rrk") <= 5)
         .select(col("q_id"), col("c_id"))
-      val hits = truth
-        .join(top5.select(col("q_id"), col("vec_id").as("c_id"),
-          lit(1L).as("hit")), Seq("q_id", "c_id"), "left_outer")
-        .groupBy(col("q_id")).agg(count(col("hit")).as("hits_adc"))
-      val hitsRr = truth
-        .join(rr5.withColumn("hit", lit(1L)),
-          Seq("q_id", "c_id"), "left_outer")
-        .groupBy(col("q_id")).agg(count(col("hit")).as("hits_rr"))
+      val hits = recallHits(truth,
+        top5.select(col("q_id"), col("vec_id").as("c_id")), "hits_adc")
+      val hitsRr = recallHits(truth, rr5, "hits_rr")
       val adcsum = top5.groupBy(col("q_id"))
         .agg(sum(col("adc_dist")).as("adc_top5"))
       hits.join(hitsRr, "q_id").join(adcsum, "q_id")
@@ -1436,14 +1330,13 @@ object Similarity {
       // equi-join as v11 — 4 table lookups + adds per stored code,
       // no float payloads, embarrassingly parallel.
       val (_, subs, cb, codes) = pqEncode(s, dir)
-      val isQ = col("vec_id") >= 100 && col("vec_id") < 120
       val sdcTab = cb.join(
           cb.select(col("m").as("mb"), col("code").as("code_b"),
             col("cv").as("cvb")),
           col("m") === col("mb"))
         .select(col("m"), col("code").as("code_a"), col("code_b"),
           intSqDist(col("cv"), col("cvb")).as("d"))
-      val qcodes = codes.filter(isQ)
+      val qcodes = codes.filter(HeldOut)
         .select(col("vec_id").as("q_id"), col("m"),
           col("code").as("code_a"))
       val qtab = qcodes.join(broadcast(sdcTab), Seq("m", "code_a"))
@@ -1458,7 +1351,7 @@ object Similarity {
       val top5s = sdc.withColumn("rn", row_number().over(ws))
         .filter(col("rn") <= 5)
       // ADC on the same artifacts (v11's table) for the side-by-side.
-      val qsubs = subs.filter(isQ)
+      val qsubs = subs.filter(HeldOut)
         .select(col("vec_id").as("q_id"), col("m"), col("sub").as("qsub"))
       val dtab = qsubs.join(broadcast(cb), "m")
         .select(col("q_id"), col("m"), col("code"),
@@ -1471,30 +1364,11 @@ object Similarity {
         .orderBy(col("adc_dist"), col("vec_id"))
       val top5a = adc.withColumn("rn", row_number().over(wa))
         .filter(col("rn") <= 5)
-      val e = Tables.load(s, dir, "embeddings")
-      val qe = e.filter(isQ)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wt = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      val truth = qe
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wt))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("c_id"))
-        // Round 16: the exact-truth subtree (a |Q|x|N| broadcast NLJ of
-        // codegen cosines + a per-query window) feeds every leg/report
-        // branch — persist the ~|Q|*5 rows so it computes once.
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val hitsS = truth
-        .join(top5s.select(col("q_id"), col("vec_id").as("c_id"),
-          lit(1L).as("hit")), Seq("q_id", "c_id"), "left_outer")
-        .groupBy(col("q_id")).agg(count(col("hit")).as("hits_sdc"))
-      val hitsA = truth
-        .join(top5a.select(col("q_id"), col("vec_id").as("c_id"),
-          lit(1L).as("hit")), Seq("q_id", "c_id"), "left_outer")
-        .groupBy(col("q_id")).agg(count(col("hit")).as("hits_adc"))
+      val truth = exactTruth(Tables.load(s, dir, "embeddings"), HeldOut)
+      val hitsS = recallHits(truth,
+        top5s.select(col("q_id"), col("vec_id").as("c_id")), "hits_sdc")
+      val hitsA = recallHits(truth,
+        top5a.select(col("q_id"), col("vec_id").as("c_id")), "hits_adc")
       val sdcsum = top5s.groupBy(col("q_id"))
         .agg(sum(col("sdc_dist")).as("sdc_top5"))
       hitsS.join(hitsA, "q_id").join(sdcsum, "q_id")
@@ -1639,8 +1513,7 @@ object Similarity {
       // every step; the corpus never shuffles.
       val e = Tables.load(s, dir, "embeddings")
       val qvAll = ivfQv(e).persist(StorageLevel.MEMORY_AND_DISK)
-      val n = qvAll.count()
-      val kSq = math.round(math.sqrt(n.toDouble)).toInt
+      val kSq = ivfK(qvAll.count())
       val cents = ivfTrainSampled(qvAll, kSq, 3) // the v17/v18 codebook
       // Round 15: the route itself is the shared [[twoLevelAssign]] —
       // the exact code path every index build now assigns through — so
@@ -1791,8 +1664,6 @@ object Similarity {
         .filter(col("hrn") <= HamShortlist)
         .select(col("q_id"), col("c_id"), col("ham"))
       val emb = e.select(col("vec_id"), col("embedding"))
-      val ws = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
       short
         .join(emb.select(col("vec_id").as("c_id"),
           col("embedding").as("c_emb")), "c_id")
@@ -1800,7 +1671,7 @@ object Similarity {
           .select(col("vec_id").as("q_id"),
             col("embedding").as("q_emb"))), "q_id")
         .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(ws).cast("long"))
+        .withColumn("rnk", row_number().over(bySim).cast("long"))
         .filter(col("rnk") <= 3)
         .select(col("q_id"), col("c_id"), col("rnk"), col("ham"),
           col("sim"))
@@ -1830,15 +1701,10 @@ object Similarity {
       // the shortlist build.
       val theta = 0.3
       val e = Tables.load(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val c = e.select(col("vec_id").as("c_id"),
-        col("embedding").as("c_emb"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      val short = q.join(c, col("q_id") =!= col("c_id"))
+      val short = queryEmb(e, col("vec_id") < 20)
+        .join(corpusEmb(e), col("q_id") =!= col("c_id"))
         .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(w))
+        .withColumn("rnk", row_number().over(bySim))
         .filter(col("rnk") <= 10)
         .select(col("q_id"), col("c_id"), col("c_emb"), col("sim"),
           col("rnk"))
@@ -1905,27 +1771,12 @@ object Similarity {
         .withColumn("r_lex", row_number().over(wl).cast("long"))
         .filter(col("r_lex") <= 20)
         .select(col("q_id"), col("c_id"), col("r_lex"))
-      val wv = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
       val vec = pairs
         .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("r_vec", row_number().over(wv).cast("long"))
+        .withColumn("r_vec", row_number().over(bySim).cast("long"))
         .filter(col("r_vec") <= 20)
         .select(col("q_id"), col("c_id"), col("r_vec"))
-      val fused = lex.join(vec, Seq("q_id", "c_id"), "full_outer")
-        .withColumn("rrf",
-          when(col("r_lex").isNotNull,
-            lit(1.0) / (lit(60.0) + col("r_lex"))).otherwise(lit(0.0)) +
-          when(col("r_vec").isNotNull,
-            lit(1.0) / (lit(60.0) + col("r_vec"))).otherwise(lit(0.0)))
-      val wf = Window.partitionBy(col("q_id"))
-        .orderBy(col("rrf").desc, col("c_id"))
-      fused.withColumn("rnk", row_number().over(wf).cast("long"))
-        .filter(col("rnk") <= 10)
-        .select(col("q_id"), col("rnk"), col("c_id"),
-          coalesce(col("r_lex"), lit(0L)).as("r_lex"),
-          coalesce(col("r_vec"), lit(0L)).as("r_vec"), col("rrf"))
-        .orderBy(col("q_id"), col("rnk"))
+      rrfFuse(lex, vec)
     },
 
     "v25b_hybrid_rrf_indexed" -> { (s, dir) =>
@@ -2005,20 +1856,7 @@ object Similarity {
         .select(col("q_id"), col("c_id"), col("r_lex"))
       val vec = indexedAnnShortlist(s, dir, 20)
         .select(col("q_id"), col("c_id"), col("rnk").as("r_vec"))
-      val fused = lex.join(vec, Seq("q_id", "c_id"), "full_outer")
-        .withColumn("rrf",
-          when(col("r_lex").isNotNull,
-            lit(1.0) / (lit(60.0) + col("r_lex"))).otherwise(lit(0.0)) +
-          when(col("r_vec").isNotNull,
-            lit(1.0) / (lit(60.0) + col("r_vec"))).otherwise(lit(0.0)))
-      val wf = Window.partitionBy(col("q_id"))
-        .orderBy(col("rrf").desc, col("c_id"))
-      fused.withColumn("rnk", row_number().over(wf).cast("long"))
-        .filter(col("rnk") <= 10)
-        .select(col("q_id"), col("rnk"), col("c_id"),
-          coalesce(col("r_lex"), lit(0L)).as("r_lex"),
-          coalesce(col("r_vec"), lit(0L)).as("r_vec"), col("rrf"))
-        .orderBy(col("q_id"), col("rnk"))
+      rrfFuse(lex, vec)
     },
 
     "v26_nprobe_sweep" -> { (s, dir) =>
@@ -2040,52 +1878,24 @@ object Similarity {
       val e = Tables.load(s, dir, "embeddings")
       val qvAll = ivfQv(e).persist(StorageLevel.MEMORY_AND_DISK)
       val cents = ivfTrain(qvAll, ivfSeed(qvAll, 16), 2)
-      val isQuery = col("vec_id") >= 100 && col("vec_id") < 120
-      val qe = e.filter(isQuery)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wt = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      val truth = qe
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wt))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("c_id"))
-        // Round 16: the exact-truth subtree (a |Q|x|N| broadcast NLJ of
-        // codegen cosines + a per-query window) feeds every leg/report
-        // branch — persist the ~|Q|*5 rows so it computes once.
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val truth = exactTruth(e, HeldOut)
       val cells = ivfAssign(qvAll, cents)
         .select(col("vec_id").as("c_id"), col("cid").as("c_cell"))
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), "c_id")
-      val wp = Window.partitionBy(col("q_id"))
-        .orderBy(col("dist"), col("cid"))
-      val probes = qvAll.filter(isQuery)
-        .select(col("vec_id").as("q_id"), col("qv"))
-        .crossJoin(broadcast(cents))
-        .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
-        .withColumn("prn", row_number().over(wp).cast("long"))
+        .join(corpusEmb(e), "c_id")
+      val probes = rankCells(qvAll.filter(HeldOut), cents,
+          row_number().over(byDist).cast("long"))
         .filter(col("prn") <= 8)
         .select(col("q_id"), col("cid").as("p_cell"), col("prn"))
-      val cand = probes.join(qe, "q_id")
-        .join(cells,
-          col("p_cell") === col("c_cell") && col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
+      val cand = rerankCells(probes, queryEmb(e, HeldOut), cells)
         .select(col("q_id"), col("c_id"), col("prn"), col("sim"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       def leg(p: Int): DataFrame = {
-        val wr = Window.partitionBy(col("q_id"))
-          .orderBy(col("sim").desc, col("c_id"))
         val in = cand.filter(col("prn") <= p)
         val nCand = in.groupBy(col("q_id"))
           .agg(count(lit(1)).as(s"n_cand_p$p"))
-        val top5 = in.withColumn("rnk", row_number().over(wr))
+        val top5 = in.withColumn("rnk", row_number().over(bySim))
           .filter(col("rnk") <= 5)
-          .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
-        truth.join(top5, Seq("q_id", "c_id"), "left_outer")
-          .groupBy(col("q_id")).agg(count(col("hit")).as(s"hits_p$p"))
+        recallHits(truth, top5, s"hits_p$p")
           .join(nCand, "q_id")
           .withColumn(s"recall_p$p", col(s"hits_p$p").cast("double") / 5.0)
       }
@@ -2189,30 +1999,6 @@ object Similarity {
   private def intSqDist(a: Column, b: Column): Column =
     call_function("int_l2", a, b)
 
-  /** L2-normalized int64-quantized vectors — v09's integer scheme
-    * (round(x/||x||*1000)): exact enough to rank, deterministic enough
-    * to hash-compare across engines. */
-  private def normQuant(e: DataFrame): DataFrame = e
-    .filter(col("embedding").isNotNull) // NULL guard (see quantizeInt8)
-    // Same rule as ivfQv (round 9) — the embeddings parquet is a single
-    // row group at test SF, so without the spread EVERY downstream PQ
-    // stage (encode, ADC scan, SDC scan, truth re-rank) serializes onto
-    // one core; StageProfile measured the whole v10/v11/v24 family as
-    // 1-task stages (31 idle threads). At production scale the file
-    // count makes this one-time spread of the tiny raw vectors
-    // proportionally free.
-    .repartition(e.sparkSession.sparkContext.defaultParallelism)
-    .select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("ed"))
-    .withColumn("nrm", sqrt(aggregate(
-      zip_with(col("ed"), col("ed"), (x, w) => x * w),
-      lit(0.0), (acc, v) => acc + v)))
-    .select(col("vec_id"),
-      transform(col("ed"), x =>
-        when(col("nrm") === 0.0, lit(0L))
-          .otherwise(round(x / col("nrm") * 1000).cast("long")))
-        .as("qv"))
-
   /** PQ train + encode shared by v10/v11: returns (qvAll, long-form
     * sub-vectors, trained codebook (m, code, cv), codes (vec_id, m,
     * code)). Training = one integer Lloyd iteration per subspace from
@@ -2225,7 +2011,10 @@ object Similarity {
     * production index stores), not raw seed vec_ids. */
   private def pqEncode(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val qvAll = normQuant(Tables.load(s, dir, "embeddings"))
+    // ivfQv's spread matters doubly here: without it every PQ stage
+    // (encode, ADC scan, SDC scan, truth re-rank) runs as 1-task stages.
+    val qvAll = ivfQv(Tables.load(s, dir, "embeddings")
+        .filter(col("embedding").isNotNull)) // NULL guard (see quantizeInt8)
       .persist(StorageLevel.MEMORY_AND_DISK)
     def subSlices(src: Column): Column =
       array((0 until PqM).map(m =>

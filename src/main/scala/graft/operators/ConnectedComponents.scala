@@ -71,9 +71,11 @@ object ConnectedComponents {
     * pin the O(log d) speedup. `maxRounds` is a runaway backstop, not a
     * budget: convergence is detected exactly.
     *
-    * The jump is ADAPTIVE: the first `jumpAfter` rounds run plain
-    * propagation, and path halving switches on only if the loop is
-    * still unconverged after them. Rationale, measured at sf0.1: a jump
+    * The jump is ADAPTIVE: plain propagation runs first, and path
+    * halving switches on only if the loop is still unconverged once
+    * `rounds >= jumpAfter`. Plain hops come in pairs, so that check
+    * first passes at the next even hop count: the default
+    * `jumpAfter = 5` runs 6 plain hops before the first jump. Rationale, measured at sf0.1: a jump
     * round costs ~2× a plain round (a label self-join plus an extra
     * eager barrier), and the first k plain rounds already resolve every
     * component of diameter < k exactly — so jumping before round k can
@@ -142,9 +144,15 @@ object ConnectedComponents {
         // counting HOPS so the O(diameter) / O(log d) properties that
         // DedupPropSpec pins stay comparable. The mid frame's two
         // consumers (union left + join right) share one exchange
-        // subtree, so the hop is not evaluated twice.
-        lab = lazyBarrier(hop(hop(lab)))
-        rounds += 2
+        // subtree, so its shuffle is written once. One hop short of
+        // `maxRounds`, take a single hop so the backstop holds exactly.
+        if (rounds + 2 <= maxRounds) {
+          lab = lazyBarrier(hop(hop(lab)))
+          rounds += 2
+        } else {
+          lab = lazyBarrier(hop(lab))
+          rounds += 1
+        }
       }
       val curSum = lab.agg(coalesce(sum(col("lbl")), lit(0L)))
         .head().getLong(0)

@@ -14,14 +14,20 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   */
 object ExplainAnalyze {
 
-  /** Run the query, then return (operator, metric, value) rows from the
-    * executed plan's SQL metrics. */
-  def run(spark: SparkSession, df: DataFrame): DataFrame = {
-    df.collect() // execute so metrics populate and AQE finalizes
-    val finalPlan = df.queryExecution.executedPlan match {
+  /** Executes `df` (so metrics populate and AQE finalizes) and returns
+    * its final physical plan, unwrapped from `AdaptiveSparkPlanExec`. */
+  private def executedFinal(df: DataFrame): SparkPlan = {
+    df.collect()
+    df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p                        => p
     }
+  }
+
+  /** Run the query, then return (operator, metric, value) rows from the
+    * executed plan's SQL metrics. */
+  def run(spark: SparkSession, df: DataFrame): DataFrame = {
+    val finalPlan = executedFinal(df)
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var id = 0
     def walk(p: SparkPlan): Unit = {
@@ -49,11 +55,7 @@ object ExplainAnalyze {
     * Spark's distributed execution stages, so this is the table an
     * operator would read to find the shuffle that dominates a job. */
   def stageTable(spark: SparkSession, df: DataFrame): DataFrame = {
-    df.collect() // execute so metrics populate and AQE finalizes
-    val finalPlan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p                        => p
-    }
+    val finalPlan = executedFinal(df)
     val seen = scala.collection.mutable.Set.empty[Int]
     val rows = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, Long, Long, Long, Long, Long)]

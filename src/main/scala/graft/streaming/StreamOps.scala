@@ -757,30 +757,9 @@ object StreamOps {
         col("seg").as("lseg"),
         nl("ann",
           "struct<nsim:double,c_id:bigint,sim:double,seg:string>"))
-    // ---- Leg 3: ANN probe — inline quantization + broadcast codebook
-    // array argmin (no stateful op, no N×K shuffle), probed-cell
-    // equi-join, exact cosine on the bounded candidate set.
-    val centsArr = cents
-      .agg(sort_array(collect_list(struct(col("cid"), col("cv"))))
-        .as("carr"))
-    val annRows = bloomed.filter(col("embedding").isNotNull)
-      .select(col("doc_id"), col("ts"),
-        col("embedding").as("q_emb"),
-        transform(col("embedding"), x => x.cast("double")).as("ed"))
-      .withColumn("nrm", sqrt(aggregate(
-        zip_with(col("ed"), col("ed"), (x, w) => x * w),
-        lit(0.0), (acc, v) => acc + v)))
-      .withColumn("qv", transform(col("ed"), x =>
-        when(col("nrm") === 0.0, lit(0L))
-          .otherwise(round(x / col("nrm") * 1000).cast("long"))))
-      .crossJoin(broadcast(centsArr))
-      .withColumn("probe", slice(array_sort(
-        transform(col("carr"), c => struct(
-          graft.llm.Similarity.ivfIntDist(col("qv"), c("cv"))
-            .as("dist"),
-          c("cid").as("cid")))), 1, nProbe))
-      .select(col("doc_id"), col("ts"), col("q_emb"),
-        explode(col("probe.cid")).as("p_cell"))
+    // ---- Leg 3: ANN probe ([[annProbe]]), probed-cell equi-join,
+    // exact cosine on the bounded candidate set.
+    val annRows = annProbe(bloomed, "doc_id", cents, nProbe)
       // c_emb rides the cells artifact (round 12 — the batch twin's
       // join-free exact re-rank; see ensureAnnDeltaIndexWhere).
       .join(cells, col("p_cell") === col("c_cell") &&
@@ -809,6 +788,32 @@ object StreamOps {
         col("n_candidates"), col("n_near"), col("n_near_delta"),
         col("best.c_id").as("ann_nn"), col("best.sim").as("ann_sim"),
         col("best.seg").as("ann_seg"))
+  }
+
+  /** The ANN probe of both serving streams: each row with an embedding
+    * is quantized inline (Similarity's ivfQv arithmetic; the norm is a
+    * column, computed once per row) and probes the nProbe nearest cells
+    * of the broadcast 1-row codebook array (exact integer L2, cid ties)
+    * — no stateful op, no N×K shuffle. Returns (`id`, ts, q_emb,
+    * p_cell), one row per probed cell. */
+  private def annProbe(df: DataFrame, id: String, cents: DataFrame,
+                       nProbe: Int): DataFrame = {
+    import graft.llm.Similarity.{ivfIntDist, l2Norm, quantize}
+    val centsArr = cents
+      .agg(sort_array(collect_list(struct(col("cid"), col("cv"))))
+        .as("carr"))
+    df.filter(col("embedding").isNotNull)
+      .select(col(id), col("ts"), col("embedding").as("q_emb"),
+        transform(col("embedding"), x => x.cast("double")).as("ed"))
+      .withColumn("nrm", l2Norm(col("ed")))
+      .withColumn("qv", quantize(col("ed"), col("nrm")))
+      .crossJoin(broadcast(centsArr))
+      .withColumn("probe", slice(array_sort(
+        transform(col("carr"), c => struct(
+          ivfIntDist(col("qv"), c("cv")).as("dist"),
+          c("cid").as("cid")))), 1, nProbe))
+      .select(col(id), col("ts"), col("q_emb"),
+        explode(col("probe.cid")).as("p_cell"))
   }
 
   /** An arriving retrieval query for the hybrid serving stream. */
@@ -878,29 +883,9 @@ object StreamOps {
       .select(col("q_id"), col("ts"), lit("lex").as("kind"),
         col("c_id"), col("e9"), lit(0.0).as("sim"))
 
-    // ---- Vector leg: inline quantization + broadcast codebook argmin
-    // (the servingIngestStream shape), probed-cell equi-join, exact
-    // cosine on the bounded candidate set.
-    val centsArr = cents
-      .agg(sort_array(collect_list(struct(col("cid"), col("cv"))))
-        .as("carr"))
-    val vecHits = base.filter(col("embedding").isNotNull)
-      .select(col("q_id"), col("ts"), col("embedding").as("q_emb"),
-        transform(col("embedding"), x => x.cast("double")).as("ed"))
-      .withColumn("nrm", sqrt(aggregate(
-        zip_with(col("ed"), col("ed"), (x, w) => x * w),
-        lit(0.0), (acc, v) => acc + v)))
-      .withColumn("qv", transform(col("ed"), x =>
-        when(col("nrm") === 0.0, lit(0L))
-          .otherwise(round(x / col("nrm") * 1000).cast("long"))))
-      .crossJoin(broadcast(centsArr))
-      .withColumn("probe", slice(array_sort(
-        transform(col("carr"), c => struct(
-          graft.llm.Similarity.ivfIntDist(col("qv"), c("cv"))
-            .as("dist"),
-          c("cid").as("cid")))), 1, nProbe))
-      .select(col("q_id"), col("ts"), col("q_emb"),
-        explode(col("probe.cid")).as("p_cell"))
+    // ---- Vector leg: [[annProbe]] (the servingIngestStream shape),
+    // probed-cell equi-join, exact cosine on the bounded candidate set.
+    val vecHits = annProbe(base, "q_id", cents, nProbe)
       .join(cells, col("p_cell") === col("c_cell") &&
         col("q_id") =!= col("c_id"))
       .join(corpusEmb, "c_id")

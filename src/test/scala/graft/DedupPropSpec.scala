@@ -300,6 +300,29 @@ class DedupPropSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"$plainRounds rounds — the chain case is not exercising diameter")
   }
 
+  test("plain CC stops within maxRounds hops, odd bounds included") {
+    val s = spark
+    import s.implicits._
+    // Plain hops run in pairs; a path longer than the bound never
+    // converges early, so the loop must end on the bound itself.
+    val genCase = for {
+      maxRounds <- Gen.oneOf(1, 3, 5)
+      extra <- Gen.choose(2, 4)
+    } yield (maxRounds, maxRounds + extra)
+    val prop = Prop.forAll(genCase) { case (maxRounds, n) =>
+      val fwd = (0 until n - 1).map(i => (i.toLong, i.toLong + 1))
+      val edges = (fwd ++ fwd.map(_.swap)).toDF("src", "dst")
+      val (_, rounds) = graft.operators.ConnectedComponents.run(edges,
+        pointerJump = false, maxRounds = maxRounds)
+      if (rounds > maxRounds)
+        println(s"CC took $rounds hops with maxRounds=$maxRounds, n=$n")
+      rounds <= maxRounds
+    }
+    val res = ScTest.check(
+      ScTest.Parameters.default.withMinSuccessfulTests(6), prop)
+    assert(res.passed, res.status.toString)
+  }
+
   /** JVM mirror of Dedup's md5-prefix token hash (same bits as Spark's
     * conv(substring(md5(t),1,15),16,10) % P and DuckDB's twin). */
   private def tokHashJvm(t: String): Long = {

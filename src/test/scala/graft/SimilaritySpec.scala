@@ -191,6 +191,22 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
       "re-compacted cells differ from the segment union")
   }
 
+  test("shared IVF leg: v09's trained leg, v17's 16-cell leg and v26's " +
+    "4-probe point agree row for row") {
+    // All three train the same K=16, T=2 codebook and probe 4 cells for
+    // the same held-out queries 100..119, so their (n_cand, hits,
+    // recall) columns must be equal per query.
+    def leg(name: String, sfx: String) =
+      graft.llm.Similarity.queries(name)(spark, sf)
+        .select(col("q_id"), col(s"n_cand_$sfx"), col(s"hits_$sfx"),
+          col(s"recall_$sfx"))
+        .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    val v09 = leg("v09_ivf_trained", "tr")
+    assert(v09.size == 20, s"expected 20 held-out queries, got ${v09.size}")
+    assert(leg("v17_ivf_sqrtn", "16") == v09, "v17's 16-cell leg != v09")
+    assert(leg("v26_nprobe_sweep", "p4") == v09, "v26's p4 point != v09")
+  }
+
   test("v05 graded projection matches the array form element-wise") {
     val graded = graft.llm.Similarity.queries("v05_quantize_int8")(spark, sf)
     val arr = graft.llm.Similarity.quantizeInt8(spark, sf)
