@@ -52,6 +52,27 @@ object Bench {
     }.min
   }
 
+  /** Pin-freshness fields of a committed measurement artifact
+    * (`bench_pinned.json`, `ann_build.json`): `head_commit` measured
+    * and `src_dirty`, whether `src/main` had uncommitted changes.
+    * PinFreshnessSpec fails the suite when src/main gains commits after
+    * the pinned one, or when `src_dirty` is missing or true. Each field
+    * is omitted when git cannot answer, so a pin made without git never
+    * claims a clean tree. The leading comma joins the enclosing object. */
+  private[graft] def provenanceJson: String = {
+    def git(cmd: String*): Option[String] = try {
+      val p = new ProcessBuilder(("git" +: cmd).asJava)
+        .redirectErrorStream(true).start()
+      val o = new String(p.getInputStream.readAllBytes()).trim
+      if (p.waitFor() == 0) Some(o) else None
+    } catch { case _: Throwable => None }
+    git("rev-parse", "HEAD").fold("") { h =>
+      val dirty = git("status", "--porcelain", "--", "src/main")
+        .fold("")(d => s""","src_dirty":${d.nonEmpty}""")
+      s""","head_commit":"$h"$dirty"""
+    }
+  }
+
   private def selectedNames: Seq[String] = {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
@@ -245,32 +266,8 @@ object Bench {
         .map(t => s""""${t.getName.stripSuffix(".parquet")}":${bytes(t)}""")
         .mkString(""","corpus_bytes":{""", ",", "}")
     }
-    // PIN-FRESHNESS record (round 16, verdict #1): the r15 pin was
-    // committed BEFORE the round's two biggest perf commits, so the
-    // "pinned artifact is authoritative" rule pointed at dead code for
-    // ~15 rows. The artifact now records the HEAD commit it measured
-    // and whether src/main was dirty at measure time;
-    // PinFreshnessSpec fails the suite when src/main gains commits
-    // after the pinned commit, making staleness loud instead of a
-    // verdict finding.
-    val headJson = {
-      def git(cmd: String*): Option[String] = try {
-        val p = new ProcessBuilder(("git" +: cmd).asJava)
-          .redirectErrorStream(true).start()
-        val o = new String(p.getInputStream.readAllBytes()).trim
-        if (p.waitFor() == 0) Some(o) else None
-      } catch { case _: Throwable => None }
-      val head = git("rev-parse", "HEAD")
-      val dirty = git("status", "--porcelain", "--", "src/main")
-        .map(_.nonEmpty)
-      (head, dirty) match {
-        case (Some(h), Some(d)) => s""","head_commit":"$h","src_dirty":$d"""
-        case (Some(h), None)    => s""","head_commit":"$h""""
-        case _                  => ""
-      }
-    }
     val out =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"errors":$errJson$sentinelJson$groupsJson$corpusJson$headJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"errors":$errJson$sentinelJson$groupsJson$corpusJson$provenanceJson,"sf":"$sfDir"}"""
     // Round-12 (verdict #7), corrected round-13 (verdict #4): the full
     // line runs to tens of KB at 270+ queries, and the driver captures a
     // bounded TAIL of stdout — so the compact self-contained summary

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
+import graft.operators.ConnectedComponents
 
 /** Deduplication operators over `documents` — exact, MinHash+LSH banding,
   * SimHash, n-gram Jaccard, duplicate clustering, canonical-doc
@@ -23,6 +24,14 @@ import graft.Tables
   *  - the cross-engine token hash is md5-prefix → int64 (both engines
   *    produce identical bits for identical strings), reduced mod a prime;
   *    seeded affine permutations give k independent MinHash draws.
+  *
+  * Connected components run through one entry point,
+  * [[graft.operators.ConnectedComponents.runPairs]] (d06, the cluster
+  * index, d24/d24b's shared [[pipelineKeptBest]] prefix, d25, v14). The
+  * DuckDB oracle declares its repeated blocks once: `lshPairCtesFrom`
+  * (banded candidate pairs), [[duckCcCtes]] (recursive components, v14
+  * too), `lshCompCtesFrom` (pairs + components) and d24/d24b's
+  * `pipelineKeptCtes` / `pipelinePackCtes`.
   */
 object Dedup {
 
@@ -61,7 +70,7 @@ object Dedup {
   // operators/ConnectedComponents.scala since round 6 (pointer-jumping
   // upgrade); d06 below is a thin wrapper over it.
   private def barrier(df: DataFrame): DataFrame =
-    graft.operators.ConnectedComponents.barrier(df)
+    ConnectedComponents.barrier(df)
 
   /** Cross-document CHUNK-level dedup (paragraph dedup à la FineWeb's
     * line dedup, at t06's 50-token chunk grid): chunks are
@@ -632,10 +641,7 @@ object Dedup {
         .select(col("da"), col("db")))
       pairs.write.mode("overwrite")
         .parquet(new java.io.File(tmp, "pairs").getPath)
-      val edges = pairs
-        .unionByName(pairs.select(col("db").as("da"), col("da").as("db")))
-        .toDF("src", "dst")
-      val (lab, _) = graft.operators.ConnectedComponents.run(edges)
+      val (lab, _) = ConnectedComponents.runPairs(pairs, "da", "db")
       lab.select(col("id").as("doc_id"), col("lbl").as("cluster"))
         .orderBy(col("doc_id"))
         .write.mode("overwrite")
@@ -907,10 +913,7 @@ object Dedup {
       // oracle; DedupPropSpec pins jump-vs-plain round counts on a chain.
       val pairs = barrier(lshPairsFrom(lshSigDf(s, dir))
         .select(col("da"), col("db")))
-      val edges = pairs
-        .unionByName(pairs.select(col("db").as("da"), col("da").as("db")))
-        .toDF("src", "dst")
-      val (lab, _) = graft.operators.ConnectedComponents.run(edges)
+      val (lab, _) = ConnectedComponents.runPairs(pairs, "da", "db")
       lab.select(col("id").as("doc_id"), col("lbl").as("cluster"))
         .orderBy(col("doc_id"))
     },
@@ -1386,36 +1389,8 @@ object Dedup {
       // parallel across scan tasks at any SF, unlike the md5 fan-out
       // the repartition exists for). The golden pins the pushed
       // predicate and that every stage reads the caches.
-      val filt = docsWithTokens(s, dir)
-        .filter(TextAnalysis.keepPredicate)
-        .select(col("doc_id"), col("source"), col("text"),
-          size(col("toks")).cast("long").as("n_toks"),
-          md5(col("text").cast("binary")).as("h"))
-        .persist(StorageLevel.MEMORY_AND_DISK) // feeds exact canon + sig + joins
-      val wEx = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("h")).orderBy(col("doc_id"))
-      val uniq = filt
-        .withColumn("rn", row_number().over(wEx))
-        .filter(col("rn") === 1).drop("rn")
-        .persist(StorageLevel.MEMORY_AND_DISK) // feeds sig + label join + quota
-      val sig = lshSigFrom(uniq)
-      val pairs = barrier(lshPairsFrom(sig).select(col("da"), col("db")))
-      val edges = pairs
-        .unionByName(pairs.select(col("db").as("da"), col("da").as("db")))
-        .toDF("src", "dst")
-      val (lab, _) = graft.operators.ConnectedComponents.run(edges)
-      val labeled = uniq
-        .join(lab.select(col("id"), col("lbl")),
-          col("doc_id") === col("id"), "left_outer")
-        .withColumn("cluster", coalesce(col("lbl"), col("doc_id")))
-      val wBest = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("cluster"))
-        .orderBy(col("n_toks").desc, col("doc_id"))
-      val kept = labeled
-        .withColumn("rnk", row_number().over(wBest))
-        .filter(col("rnk") === 1)
-        .select(col("doc_id"), col("source"), col("n_toks"), col("h"))
-      packingManifest(kept)
+      packingManifest(pipelineKeptBest(s, dir)
+        .select(col("doc_id"), col("source"), col("n_toks"), col("h")))
     },
 
     "d24b_pipeline_spans" -> { (s, dir) =>
@@ -1435,39 +1410,12 @@ object Dedup {
       // exists to surface. dup_toks ≤ n_toks by construction, so the
       // cleaned mass is never negative (fully-duplicated docs enter
       // the quota at 0 tokens).
-      val filt = docsWithTokens(s, dir)
-        .filter(TextAnalysis.keepPredicate)
-        .select(col("doc_id"), col("source"), col("text"),
-          size(col("toks")).cast("long").as("n_toks"),
-          md5(col("text").cast("binary")).as("h"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val wEx = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("h")).orderBy(col("doc_id"))
-      val uniq = filt
-        .withColumn("rn", row_number().over(wEx))
-        .filter(col("rn") === 1).drop("rn")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val sig = lshSigFrom(uniq)
-      val pairs = barrier(lshPairsFrom(sig).select(col("da"), col("db")))
-      val edges = pairs
-        .unionByName(pairs.select(col("db").as("da"), col("da").as("db")))
-        .toDF("src", "dst")
-      val (lab, _) = graft.operators.ConnectedComponents.run(edges)
-      val labeled = uniq
-        .join(lab.select(col("id"), col("lbl")),
-          col("doc_id") === col("id"), "left_outer")
-        .withColumn("cluster", coalesce(col("lbl"), col("doc_id")))
-      val wBest = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("cluster"))
-        .orderBy(col("n_toks").desc, col("doc_id"))
-      val kept = labeled
-        .withColumn("rnk", row_number().over(wBest))
-        .filter(col("rnk") === 1)
+      val kept = pipelineKeptBest(s, dir)
         .select(col("doc_id"), col("source"), col("text"),
           col("n_toks"), col("h"))
-        // Round 17 (guide §5): kept feeds the span miner AND the
-        // cleaned join-back — without the persist the labels join +
-        // keep-best window re-ran once per consumer.
+        // kept feeds the span miner AND the cleaned join-back — without
+        // the persist the labels join + keep-best window re-run once per
+        // consumer.
         .persist(StorageLevel.MEMORY_AND_DISK)
       val spans = dupSpansPerDoc(
         kept.select(col("doc_id"), col("source"),
@@ -2814,6 +2762,39 @@ object Dedup {
     * staying above incidental 3-gram collisions. */
   private[graft] val DupSpanK = 8
 
+  /** d24/d24b's shared prefix, one plan: t07 quality filter → d01 exact
+    * dedup (min doc_id per content hash) → d03 near-dup mining over the
+    * survivors → d06 components → the best doc of each cluster
+    * (n_toks DESC, doc_id), all columns kept for the caller's select.
+    * `filt` and `uniq` each persist once and fan out, so the corpus is
+    * scanned and token-hashed once. */
+  private def pipelineKeptBest(s: SparkSession, dir: String): DataFrame = {
+    val filt = docsWithTokens(s, dir)
+      .filter(TextAnalysis.keepPredicate)
+      .select(col("doc_id"), col("source"), col("text"),
+        size(col("toks")).cast("long").as("n_toks"),
+        md5(col("text").cast("binary")).as("h"))
+      .persist(StorageLevel.MEMORY_AND_DISK) // feeds exact canon + sig + joins
+    val wEx = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("h")).orderBy(col("doc_id"))
+    val uniq = filt
+      .withColumn("rn", row_number().over(wEx))
+      .filter(col("rn") === 1).drop("rn")
+      .persist(StorageLevel.MEMORY_AND_DISK) // feeds sig + label join + quota
+    val pairs = barrier(lshPairsFrom(lshSigFrom(uniq))
+      .select(col("da"), col("db")))
+    val (lab, _) = ConnectedComponents.runPairs(pairs, "da", "db")
+    val wBest = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("cluster"))
+      .orderBy(col("n_toks").desc, col("doc_id"))
+    uniq
+      .join(lab.select(col("id"), col("lbl")),
+        col("doc_id") === col("id"), "left_outer")
+      .withColumn("cluster", coalesce(col("lbl"), col("doc_id")))
+      .withColumn("rnk", row_number().over(wBest))
+      .filter(col("rnk") === 1)
+  }
+
   /** d24's quota → epoch-shard → packing tail over a kept-doc frame
     * (doc_id, source, n_toks, h) — factored out so d24 and the
     * span-cleaned d24b differ ONLY in the token-mass input (d24b
@@ -2980,10 +2961,7 @@ object Dedup {
     * invariant checks on synthetic pair sets. */
   private[graft] def splitSafetyReport(docs: DataFrame,
                                        pairs: DataFrame): DataFrame = {
-    val edges = pairs
-      .unionByName(pairs.select(col("db").as("da"), col("da").as("db")))
-      .toDF("src", "dst")
-    val (lab, _) = graft.operators.ConnectedComponents.run(edges)
+    val (lab, _) = ConnectedComponents.runPairs(pairs, "da", "db")
     splitSafetyReportFrom(docs, pairs,
       lab.select(col("id").as("cid"), col("lbl").as("cluster")))
   }
@@ -3117,6 +3095,23 @@ object Dedup {
            |FROM exact e LEFT JOIN ver v ON e.doc_id = v.da
            |ORDER BY e.doc_id""".stripMargin
 
+  /** DuckDB recursive connected components over the undirected pair
+    * table `pairs` (node columns `a`, `b`): symmetric `edges` with self
+    * loops, then `reach` (a, b) = every b reachable from a, so MIN(b)
+    * per a is the component label — the fixpoint
+    * [[graft.operators.ConnectedComponents]] converges to. Needs the
+    * enclosing WITH RECURSIVE. */
+  private[llm] def duckCcCtes(pairs: String, a: String, b: String): String =
+    s"""edges AS (
+       | SELECT $a AS a, $b AS b FROM $pairs
+       | UNION SELECT $b, $a FROM $pairs
+       | UNION SELECT $a, $a FROM $pairs
+       | UNION SELECT $b, $b FROM $pairs),
+       |reach AS (
+       | SELECT a, b FROM edges
+       | UNION
+       | SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)""".stripMargin
+
   def oracle: Map[String, String] = {
     val mhExprs = A.indices.map { j =>
       s"list_min(list_transform(toks, t -> (${A(j)} * $duckTokHash + ${B(j)}) % 2147483647)) AS mh$j"
@@ -3154,6 +3149,69 @@ object Dedup {
          | WHERE CAST(len(list_intersect(ta, tb)) AS DOUBLE) /
          |    (len(ta) + len(tb) - len(list_intersect(ta, tb))) >= 0.7)""".stripMargin
     val lshPairCtes = lshPairCtesFrom("documents")
+    // The pairs' components: `comp` (doc_id, cluster = min doc_id).
+    def lshCompCtesFrom(src: String) =
+      s"""${lshPairCtesFrom(src)},
+         |${duckCcCtes("dup_pairs", "da", "db")},
+         |comp AS (
+         | SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS cluster
+         | FROM reach GROUP BY a)""".stripMargin
+    val lshCompCtes = lshCompCtesFrom("documents")
+    // d24/d24b's shared prefix: t07 filter, exact canonical (`uniq`),
+    // near-dup components over the survivors, keep-best per cluster
+    // (`kept`); d24b carries `text` through for its span pass.
+    def pipelineKeptCtes(withText: Boolean) = {
+      val (text, uText) = if (withText) ("text, ", "u.text, ") else ("", "")
+      s"""WITH RECURSIVE ${TextAnalysis.keepFiltCteSql},
+         |uniq AS (
+         | SELECT doc_id, source, text, n_toks, h FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY h ORDER BY doc_id)
+         |    AS rn
+         |  FROM filt) t WHERE rn = 1),
+         |${lshCompCtesFrom("uniq")},
+         |labeled AS (
+         | SELECT u.doc_id, u.source, ${uText}u.n_toks, u.h,
+         |  COALESCE(c.cluster, u.doc_id) AS cluster
+         | FROM uniq u LEFT JOIN comp c ON u.doc_id = c.doc_id),
+         |kept AS (
+         | SELECT doc_id, source, ${text}n_toks, h FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY cluster
+         |    ORDER BY n_toks DESC, doc_id) AS rnk FROM labeled) t
+         | WHERE rnk = 1)""".stripMargin
+    }
+    // d24/d24b's shared tail over `src` (doc_id, source, n_toks, h): the
+    // greedy per-source quota in hash order, epoch shard, packing.
+    def pipelinePackCtes(src: String) =
+      s"""mixq AS (
+         | SELECT doc_id, n_toks,
+         |  COALESCE(SUM(n_toks) OVER (PARTITION BY source
+         |    ORDER BY h, doc_id
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+         |    AS cum_before
+         | FROM $src),
+         |mixed AS (
+         | SELECT doc_id, n_toks FROM mixq WHERE cum_before < 40000),
+         |sh AS (
+         | SELECT doc_id, n_toks,
+         |  ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':ep1'),
+         |    1, 15))::BIGINT % 32 AS shard,
+         |  COALESCE(SUM(n_toks) OVER (ORDER BY doc_id
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+         |    AS cum_before
+         | FROM mixed),
+         |packed AS (
+         | SELECT doc_id, n_toks, shard,
+         |  CAST(cum_before // 512 AS BIGINT) AS seq_id,
+         |  CAST(GREATEST(cum_before + n_toks
+         |    - (cum_before // 512 + 1) * 512, 0) AS BIGINT) AS spill
+         | FROM sh)
+         |SELECT seq_id, COUNT(*) AS n_docs,
+         | CAST(SUM(n_toks) AS BIGINT) AS doc_toks,
+         | CAST(MIN(doc_id) AS BIGINT) AS first_doc,
+         | CAST(MAX(doc_id) AS BIGINT) AS last_doc,
+         | CAST(SUM(spill) AS BIGINT) AS spill_toks,
+         | COUNT(DISTINCT shard) AS n_shards
+         |FROM packed GROUP BY seq_id ORDER BY seq_id""".stripMargin
 
     val bitSums = (0 until 16).map(j =>
       s"SUM(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS b$j")
@@ -3179,15 +3237,7 @@ object Dedup {
 
       "d06_dup_clusters" ->
         s"""WITH RECURSIVE $lshPairCtes,
-           |edges AS (
-           | SELECT da AS a, db AS b FROM dup_pairs
-           | UNION SELECT db, da FROM dup_pairs
-           | UNION SELECT da, da FROM dup_pairs
-           | UNION SELECT db, db FROM dup_pairs),
-           |reach AS (
-           | SELECT a, b FROM edges
-           | UNION
-           | SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
+           |${duckCcCtes("dup_pairs", "da", "db")}
            |SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS cluster
            |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
 
@@ -3520,94 +3570,11 @@ object Dedup {
       // best, greedy per-source quota in hash order (the ONE-window
       // form the two-grain Spark prefix must equal), shard + packing.
       "d24_training_pipeline" ->
-        s"""WITH RECURSIVE ${TextAnalysis.keepFiltCteSql},
-           |uniq AS (
-           | SELECT doc_id, source, text, n_toks, h FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY h ORDER BY doc_id)
-           |    AS rn
-           |  FROM filt) t WHERE rn = 1),
-           |${lshPairCtesFrom("uniq")},
-           |edges AS (
-           | SELECT da AS a, db AS b FROM dup_pairs
-           | UNION SELECT db, da FROM dup_pairs
-           | UNION SELECT da, da FROM dup_pairs
-           | UNION SELECT db, db FROM dup_pairs),
-           |reach AS (
-           | SELECT a, b FROM edges
-           | UNION
-           | SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-           |comp AS (
-           | SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS cluster
-           | FROM reach GROUP BY a),
-           |labeled AS (
-           | SELECT u.doc_id, u.source, u.n_toks, u.h,
-           |  COALESCE(c.cluster, u.doc_id) AS cluster
-           | FROM uniq u LEFT JOIN comp c ON u.doc_id = c.doc_id),
-           |kept AS (
-           | SELECT doc_id, source, n_toks, h FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY cluster
-           |    ORDER BY n_toks DESC, doc_id) AS rnk FROM labeled) t
-           | WHERE rnk = 1),
-           |mixq AS (
-           | SELECT doc_id, n_toks,
-           |  COALESCE(SUM(n_toks) OVER (PARTITION BY source
-           |    ORDER BY h, doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           |    AS cum_before
-           | FROM kept),
-           |mixed AS (
-           | SELECT doc_id, n_toks FROM mixq WHERE cum_before < 40000),
-           |sh AS (
-           | SELECT doc_id, n_toks,
-           |  ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':ep1'),
-           |    1, 15))::BIGINT % 32 AS shard,
-           |  COALESCE(SUM(n_toks) OVER (ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           |    AS cum_before
-           | FROM mixed),
-           |packed AS (
-           | SELECT doc_id, n_toks, shard,
-           |  CAST(cum_before // 512 AS BIGINT) AS seq_id,
-           |  CAST(GREATEST(cum_before + n_toks
-           |    - (cum_before // 512 + 1) * 512, 0) AS BIGINT) AS spill
-           | FROM sh)
-           |SELECT seq_id, COUNT(*) AS n_docs,
-           | CAST(SUM(n_toks) AS BIGINT) AS doc_toks,
-           | CAST(MIN(doc_id) AS BIGINT) AS first_doc,
-           | CAST(MAX(doc_id) AS BIGINT) AS last_doc,
-           | CAST(SUM(spill) AS BIGINT) AS spill_toks,
-           | COUNT(DISTINCT shard) AS n_shards
-           |FROM packed GROUP BY seq_id ORDER BY seq_id""".stripMargin,
+        s"""${pipelineKeptCtes(withText = false)},
+           |${pipelinePackCtes("kept")}""".stripMargin,
 
       "d24b_pipeline_spans" ->
-        s"""WITH RECURSIVE ${TextAnalysis.keepFiltCteSql},
-           |uniq AS (
-           | SELECT doc_id, source, text, n_toks, h FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY h ORDER BY doc_id)
-           |    AS rn
-           |  FROM filt) t WHERE rn = 1),
-           |${lshPairCtesFrom("uniq")},
-           |edges AS (
-           | SELECT da AS a, db AS b FROM dup_pairs
-           | UNION SELECT db, da FROM dup_pairs
-           | UNION SELECT da, da FROM dup_pairs
-           | UNION SELECT db, db FROM dup_pairs),
-           |reach AS (
-           | SELECT a, b FROM edges
-           | UNION
-           | SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-           |comp AS (
-           | SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS cluster
-           | FROM reach GROUP BY a),
-           |labeled AS (
-           | SELECT u.doc_id, u.source, u.text, u.n_toks, u.h,
-           |  COALESCE(c.cluster, u.doc_id) AS cluster
-           | FROM uniq u LEFT JOIN comp c ON u.doc_id = c.doc_id),
-           |kept AS (
-           | SELECT doc_id, source, text, n_toks, h FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY cluster
-           |    ORDER BY n_toks DESC, doc_id) AS rnk FROM labeled) t
-           | WHERE rnk = 1),
+        s"""${pipelineKeptCtes(withText = true)},
            |spk AS (
            | SELECT doc_id, string_split(text, ' ') AS tk FROM kept),
            |soc AS (
@@ -3642,36 +3609,7 @@ object Dedup {
            | SELECT k.doc_id, k.source,
            |  k.n_toks - COALESCE(s.dup_toks, 0) AS n_toks, k.h
            | FROM kept k LEFT JOIN sper s ON k.doc_id = s.doc_id),
-           |mixq AS (
-           | SELECT doc_id, n_toks,
-           |  COALESCE(SUM(n_toks) OVER (PARTITION BY source
-           |    ORDER BY h, doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           |    AS cum_before
-           | FROM cleaned),
-           |mixed AS (
-           | SELECT doc_id, n_toks FROM mixq WHERE cum_before < 40000),
-           |sh AS (
-           | SELECT doc_id, n_toks,
-           |  ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':ep1'),
-           |    1, 15))::BIGINT % 32 AS shard,
-           |  COALESCE(SUM(n_toks) OVER (ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           |    AS cum_before
-           | FROM mixed),
-           |packed AS (
-           | SELECT doc_id, n_toks, shard,
-           |  CAST(cum_before // 512 AS BIGINT) AS seq_id,
-           |  CAST(GREATEST(cum_before + n_toks
-           |    - (cum_before // 512 + 1) * 512, 0) AS BIGINT) AS spill
-           | FROM sh)
-           |SELECT seq_id, COUNT(*) AS n_docs,
-           | CAST(SUM(n_toks) AS BIGINT) AS doc_toks,
-           | CAST(MIN(doc_id) AS BIGINT) AS first_doc,
-           | CAST(MAX(doc_id) AS BIGINT) AS last_doc,
-           | CAST(SUM(spill) AS BIGINT) AS spill_toks,
-           | COUNT(DISTINCT shard) AS n_shards
-           |FROM packed GROUP BY seq_id ORDER BY seq_id""".stripMargin,
+           |${pipelinePackCtes("cleaned")}""".stripMargin,
 
       "d20_normalized_dedup" ->
         """WITH n AS (
@@ -3699,19 +3637,7 @@ object Dedup {
           |FROM h GROUP BY shard ORDER BY shard""".stripMargin,
 
       "d25_cluster_safe_split" ->
-        s"""WITH RECURSIVE $lshPairCtes,
-           |edges AS (
-           | SELECT da AS a, db AS b FROM dup_pairs
-           | UNION SELECT db, da FROM dup_pairs
-           | UNION SELECT da, da FROM dup_pairs
-           | UNION SELECT db, db FROM dup_pairs),
-           |reach AS (
-           | SELECT a, b FROM edges
-           | UNION
-           | SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-           |comp AS (
-           | SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS cluster
-           | FROM reach GROUP BY a),
+        s"""WITH RECURSIVE $lshCompCtes,
            |docs AS (
            | SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS n_toks
            | FROM documents WHERE text IS NOT NULL),
@@ -4217,19 +4143,7 @@ object Dedup {
       // d07's component CTEs + per-source rollup; soft weights in the
       // same floor(n_toks*1e6 / csize) fixed-point integer form.
       "d36_soft_dedup" ->
-        s"""WITH RECURSIVE $lshPairCtes,
-           |edges AS (
-           | SELECT da AS a, db AS b FROM dup_pairs
-           | UNION SELECT db, da FROM dup_pairs
-           | UNION SELECT da, da FROM dup_pairs
-           | UNION SELECT db, db FROM dup_pairs),
-           |reach AS (
-           | SELECT a, b FROM edges
-           | UNION
-           | SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-           |comp AS (
-           | SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS cluster
-           | FROM reach GROUP BY a),
+        s"""WITH RECURSIVE $lshCompCtes,
            |lens AS (
            | SELECT doc_id, source,
            |  CAST(len(string_split(text,' ')) AS BIGINT) AS n_toks
@@ -4256,19 +4170,7 @@ object Dedup {
       // d36's component CTEs; takedown = md5 first hex <= '1'; new
       // keeper via arg_min over surviving rnk (Spark: struct-min).
       "d37_deletion_audit" ->
-        s"""WITH RECURSIVE $lshPairCtes,
-           |edges AS (
-           | SELECT da AS a, db AS b FROM dup_pairs
-           | UNION SELECT db, da FROM dup_pairs
-           | UNION SELECT da, da FROM dup_pairs
-           | UNION SELECT db, db FROM dup_pairs),
-           |reach AS (
-           | SELECT a, b FROM edges
-           | UNION
-           | SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-           |comp AS (
-           | SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS cluster
-           | FROM reach GROUP BY a),
+        s"""WITH RECURSIVE $lshCompCtes,
            |lens AS (
            | SELECT doc_id, source,
            |  CAST(len(string_split(text,' ')) AS BIGINT) AS n_toks,
@@ -4593,19 +4495,7 @@ object Dedup {
       },
 
       "d07_keep_best" ->
-        s"""WITH RECURSIVE $lshPairCtes,
-           |edges AS (
-           | SELECT da AS a, db AS b FROM dup_pairs
-           | UNION SELECT db, da FROM dup_pairs
-           | UNION SELECT da, da FROM dup_pairs
-           | UNION SELECT db, db FROM dup_pairs),
-           |reach AS (
-           | SELECT a, b FROM edges
-           | UNION
-           | SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-           |comp AS (
-           | SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS cluster
-           | FROM reach GROUP BY a),
+        s"""WITH RECURSIVE $lshCompCtes,
            |lens AS (
            | SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS n_toks
            | FROM documents),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
+import graft.operators.ConnectedComponents
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (`array<float>`, 64-dim).
@@ -44,6 +45,14 @@ import graft.Tables
   * index probe of v18/v19/v19b/v25b) and [[rrfFuse]] (v25/v25b), over
   * the integer IVF machinery ([[ivfQv]], [[ivfAssign]],
   * [[twoLevelAssign]]).
+  *
+  * The DuckDB oracle mirrors that structure with one SQL builder per
+  * repeated block (the "DuckDB oracle CTE builders" section):
+  * `quantCte`, `SqrtNSql` (√N sizing), `seedCte`, `assignCte`,
+  * `updateCte`, `lloyd16Ctes`, `sqrtNCodebookCtes`, `coarseGroupCtes`,
+  * `routedCellCte`, `flatCellCte`, `probeRerankCtes`, `exactPairsCte`,
+  * `truthCtes`, `hitsCte` and `ivfLegCtes`; [[annIndexCtes]] (v18,
+  * v25b) and [[annServeCtes]] (v19, v19b, v23, v30, d33) compose them.
   *
   * Cosine is the custom Catalyst expression `cosine_sim`
   * (graft.functions.CosineSimilarity, codegen'd); the DuckDB oracle
@@ -1588,12 +1597,9 @@ object Similarity {
       // checkpoint-barriered lineage); labels stay distributed — only
       // the convergence scalar reaches the driver per round. Same
       // fixpoint as the DuckDB recursive-CTE oracle.
-      val pairs = graft.operators.ConnectedComponents.barrier(
+      val pairs = ConnectedComponents.barrier(
         neardupPairs(s, dir).select(col("va"), col("vb")))
-      val edges = pairs
-        .unionByName(pairs.select(col("vb").as("va"), col("va").as("vb")))
-        .toDF("src", "dst")
-      val (lab, _) = graft.operators.ConnectedComponents.run(edges)
+      val (lab, _) = ConnectedComponents.runPairs(pairs, "va", "vb")
       lab.select(col("id").as("vec_id"), col("lbl").as("cluster"))
         .orderBy(col("vec_id"))
     },
@@ -2127,274 +2133,295 @@ object Similarity {
       |        list_dot_product(CAST(%s AS DOUBLE[]), CAST(%s AS DOUBLE[])))"""
       .stripMargin
 
-  /** DuckDB twin of the FULL-corpus IVF index (v18's inline
-    * recomputation — the index is a materialized view, not a semantic
-    * change): trains the √N/T=3 codebook over the same bounded 256·K
-    * md5-sample the index build uses, assigns every vector, probes K/4
-    * cells for the queries selected by `queryPred` (over alias q), and
-    * exact-cosine re-ranks. The returned CTE chain (no WITH prefix)
-    * ends with `reranked` (q_id, c_id, sim, rnk). Shared by v18 and
-    * v25b's vector shortlist. */
-  private def annIndexCtes(queryPred: String): String = {
-
-      // DuckDB twin of the indexed serving path: recompute the √N/T=3
-      // codebook (trained over the same bounded 256·K md5-sample the
-      // index build uses) and cell assignment inline (the index is a
-      // materialized view, not a semantic change) — the assignment via
-      // the SAME two-level route the build runs since round 15 (coarse
-      // 2-round Lloyd over the K centroids, route, fine argmin within
-      // the routed group; see twoLevelAssign) — probe K/4 cells,
-      // exact-cosine re-rank, emit each query's top 5 with similarity.
-      val kSql = "(SELECT CAST(round(sqrt(COUNT(*))) AS BIGINT) FROM q)"
-      val pSql = "(SELECT GREATEST(1, CAST(round(round(sqrt(COUNT(*))) / 4.0) AS BIGINT)) FROM q)"
-      val sSql = "(SELECT 256 * CAST(round(sqrt(COUNT(*))) AS BIGINT) FROM q)"
-      val gSql = "(SELECT GREATEST(1, CAST(round(sqrt(CAST(round(sqrt(" +
-        "COUNT(*))) AS DOUBLE))) AS BIGINT)) FROM q)"
-      def dist(a: String, b: String): String =
-        s"list_sum(list_transform(range(64), ii -> ($a[ii+1] - $b[ii+1]) * ($a[ii+1] - $b[ii+1])))"
-      def seedCte(name: String, limitSql: String,
-                  src: String = "q"): String =
-        s"""$name AS (
-           | SELECT cid, cv FROM (
-           |  SELECT vec_id AS cid, qv AS cv,
-           |   row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-           |     vec_id) AS srn
-           |  FROM $src) t WHERE srn <= $limitSql)""".stripMargin
-      def assignCte(name: String, cents: String,
-                    src: String = "q"): String =
-        s"""$name AS (
-           | SELECT vec_id, qv, cid FROM (
-           |  SELECT q.vec_id, q.qv, c.cid,
-           |   row_number() OVER (PARTITION BY q.vec_id
-           |     ORDER BY ${dist("q.qv", "c.cv")}, c.cid) AS rn
-           |  FROM $src q CROSS JOIN $cents c) t WHERE rn = 1)"""
-          .stripMargin
-      def updateCte(dimsName: String, centsName: String,
-                    assigned: String): String =
-        s"""$dimsName AS (
-           | SELECT cid, dim,
-           |  CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS mval
-           | FROM (SELECT cid, generate_subscripts(qv, 1) AS dim,
-           |        unnest(qv) AS v FROM $assigned) t
-           | GROUP BY cid, dim),
-           |${dimsName}s AS (
-           | SELECT cid, list(mval ORDER BY dim) AS mv,
-           |  CAST(SUM(mval * mval) AS BIGINT) AS ss
-           | FROM $dimsName GROUP BY cid),
-           |$centsName AS (
-           | SELECT cid, list_transform(mv, m -> CASE WHEN ss = 0
-           |   THEN CAST(0 AS BIGINT)
-           |   ELSE CAST(round(CAST(m AS DOUBLE) / sqrt(CAST(ss AS DOUBLE)) * 1000) AS BIGINT) END) AS cv
-           | FROM ${dimsName}s)""".stripMargin
-      
-    s"""q AS (
-         | SELECT vec_id,
-         |  list_transform(ed, x -> CASE WHEN nrm = 0
-         |    THEN CAST(0 AS BIGINT)
-         |    ELSE CAST(round(x / nrm * 1000) AS BIGINT) END) AS qv
-         | FROM (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ed,
-         |   sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-         |        CAST(embedding AS DOUBLE[]))) AS nrm
-         |  FROM embeddings) tq),
-         |samp AS (
-         | SELECT vec_id, qv FROM (
-         |  SELECT vec_id, qv,
-         |   row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-         |     vec_id) AS srn
-         |  FROM q) t WHERE srn <= $sSql),
-         |${seedCte("seedsq", kSql, "samp")},
-         |${assignCte("b1", "seedsq", "samp")},
-         |${updateCte("w1", "d1", "b1")},
-         |${assignCte("b2", "d1", "samp")},
-         |${updateCte("w2", "d2", "b2")},
-         |${assignCte("b3", "d2", "samp")},
-         |${updateCte("w3", "d3", "b3")},
-         |centq AS (SELECT cid AS vec_id, cv AS qv FROM d3),
-         |${seedCte("gseed", gSql, "centq")},
-         |${assignCte("g1", "gseed", "centq")},
-         |${updateCte("gw1", "gc1", "g1")},
-         |${assignCte("g2", "gc1", "centq")},
-         |${updateCte("gw2", "gc2", "g2")},
-         |${assignCte("fmapraw", "gc2", "centq")},
-         |fmap AS (SELECT vec_id AS fcid, cid AS gid FROM fmapraw),
-         |${assignCte("routedq", "gc2")},
-         |af AS (
-         | SELECT vec_id AS c_id, cell AS c_cell FROM (
-         |  SELECT r.vec_id, c.cid AS cell,
-         |   row_number() OVER (PARTITION BY r.vec_id
-         |     ORDER BY ${dist("r.qv", "c.cv")}, c.cid) AS rn
-         |  FROM routedq r JOIN fmap fm ON r.cid = fm.gid
-         |   JOIN d3 c ON fm.fcid = c.cid) t WHERE rn = 1
-         | UNION ALL
-         | SELECT vec_id AS c_id, cell AS c_cell FROM (
-         |  SELECT r.vec_id, c.cid AS cell,
-         |   row_number() OVER (PARTITION BY r.vec_id
-         |     ORDER BY ${dist("r.qv", "c.cv")}, c.cid) AS rn
-         |  FROM routedq r CROSS JOIN d3 c
-         |  WHERE r.cid NOT IN (SELECT gid FROM fmap)) t WHERE rn = 1),
-         |probes AS (
-         | SELECT q_id, p_cell FROM (
-         |  SELECT q.vec_id AS q_id, c.cid AS p_cell,
-         |   row_number() OVER (PARTITION BY q.vec_id
-         |     ORDER BY ${dist("q.qv", "c.cv")}, c.cid) AS prn
-         |  FROM q CROSS JOIN d3 c
-         |  WHERE $queryPred) t
-         | WHERE prn <= $pSql),
-         |reranked AS (
-         | SELECT p.q_id, a.c_id,
-         |  ${cos("qe.embedding", "ce.embedding")} AS sim,
-         |  row_number() OVER (PARTITION BY p.q_id ORDER BY
-         |    ${cos("qe.embedding", "ce.embedding")} DESC, a.c_id) AS rnk
-         | FROM probes p
-         |  JOIN embeddings qe ON p.q_id = qe.vec_id
-         |  JOIN af a ON p.p_cell = a.c_cell AND p.q_id <> a.c_id
-         |  JOIN embeddings ce ON a.c_id = ce.vec_id)""".stripMargin
-  }
-
   private def cos(a: String, b: String): String =
     duckCos.format(a, b, a, a, b, b)
 
-  /** Shared DuckDB CTE chain for delta-segmented ANN serving (v19 and
-    * d33's serving composite): recompute the base-slice codebook over
-    * the bounded md5 sample, assign base + frozen-codebook delta cells
-    * — both via the two-level route the build runs since round 15
-    * (see [[twoLevelAssign]]) — with segment tags, probe, and
-    * exact-cosine re-rank. Ends in
-    * `reranked` (q_id, c_id, seg, sim, rnk); callers append their own
-    * final SELECT (v19: top-5; d33: rnk = 1 joined per doc). The
-    * three predicates are SQL over `vec_id` (probePred over alias
-    * `q`), mirroring [[ensureAnnDeltaIndexWhere]]'s slices. */
-  private[graft] def annServeCtes(basePred: String, deltaPred: String,
-                                  probePred: String): String = {
-    val kSql = "(SELECT CAST(round(sqrt(COUNT(*))) AS BIGINT) FROM qb)"
-    val pSql = "(SELECT GREATEST(1, CAST(round(round(sqrt(COUNT(*))) / 4.0) AS BIGINT)) FROM qb)"
-    val sSql = "(SELECT 256 * CAST(round(sqrt(COUNT(*))) AS BIGINT) FROM qb)"
-    val gSql = "(SELECT GREATEST(1, CAST(round(sqrt(CAST(round(sqrt(" +
-      "COUNT(*))) AS DOUBLE))) AS BIGINT)) FROM qb)"
-    def dist(a: String, b: String): String =
-      s"list_sum(list_transform(range(64), ii -> ($a[ii+1] - $b[ii+1]) * ($a[ii+1] - $b[ii+1])))"
-    def assignCte(name: String, cents: String,
-                  src: String = "qb"): String =
-      s"""$name AS (
-         | SELECT vec_id, qv, cid FROM (
-         |  SELECT q.vec_id, q.qv, c.cid,
-         |   row_number() OVER (PARTITION BY q.vec_id
-         |     ORDER BY ${dist("q.qv", "c.cv")}, c.cid) AS rn
-         |  FROM $src q CROSS JOIN $cents c) t WHERE rn = 1)"""
-        .stripMargin
-    def updateCte(dimsName: String, centsName: String,
-                  assigned: String): String =
-      s"""$dimsName AS (
-         | SELECT cid, dim,
-         |  CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS mval
-         | FROM (SELECT cid, generate_subscripts(qv, 1) AS dim,
-         |        unnest(qv) AS v FROM $assigned) t
-         | GROUP BY cid, dim),
-         |${dimsName}s AS (
-         | SELECT cid, list(mval ORDER BY dim) AS mv,
-         |  CAST(SUM(mval * mval) AS BIGINT) AS ss
-         | FROM $dimsName GROUP BY cid),
-         |$centsName AS (
-         | SELECT cid, list_transform(mv, m -> CASE WHEN ss = 0
-         |   THEN CAST(0 AS BIGINT)
-         |   ELSE CAST(round(CAST(m AS DOUBLE) / sqrt(CAST(ss AS DOUBLE)) * 1000) AS BIGINT) END) AS cv
-         | FROM ${dimsName}s)""".stripMargin
-    s"""q AS (
-       | SELECT vec_id,
-       |  list_transform(ed, x -> CASE WHEN nrm = 0
-       |    THEN CAST(0 AS BIGINT)
-       |    ELSE CAST(round(x / nrm * 1000) AS BIGINT) END) AS qv
-       | FROM (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ed,
-       |   sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-       |        CAST(embedding AS DOUBLE[]))) AS nrm
-       |  FROM embeddings) tq),
-       |qb AS (SELECT vec_id, qv FROM q WHERE $basePred),
-       |qd AS (SELECT vec_id, qv FROM q WHERE $deltaPred),
-       |samp AS (
-       | SELECT vec_id, qv FROM (
-       |  SELECT vec_id, qv,
-       |   row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-       |     vec_id) AS srn
-       |  FROM qb) t WHERE srn <= $sSql),
-       |seedsq AS (
+  // ---- DuckDB oracle CTE builders ----
+  // Each building block the v-family oracles repeat is declared once
+  // here. A builder's text is part of every oracle that composes it, and
+  // the oracle is the reference: a change here must leave every
+  // generated SQL string unchanged (diff Verify's oracle_sql.json dump).
+
+  /** Exact integer squared L2 over two `dims`-long DuckDB int lists. */
+  private def duckL2(a: String, b: String, dims: Int = 64): String =
+    s"list_sum(list_transform(range($dims), ii -> ($a[ii+1] - $b[ii+1]) * ($a[ii+1] - $b[ii+1])))"
+
+  /** `q` (vec_id, qv): every embedding quantized as [[ivfQv]] does. */
+  private val quantCte =
+    """q AS (
+      | SELECT vec_id,
+      |  list_transform(ed, x -> CASE WHEN nrm = 0
+      |    THEN CAST(0 AS BIGINT)
+      |    ELSE CAST(round(x / nrm * 1000) AS BIGINT) END) AS qv
+      | FROM (
+      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ed,
+      |   sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
+      |        CAST(embedding AS DOUBLE[]))) AS nrm
+      |  FROM embeddings) tq)""".stripMargin
+
+  /** The √N sizing scalars over the row count N of source alias `src`,
+    * the engine's derivation: `k` = round(√N) cells, `probe` =
+    * max(1, round(k/4)) probed cells, `sample` = 256·k training rows,
+    * `groups` = max(1, round(√k)) coarse groups. */
+  private final class SqrtNSql(src: String) {
+    private def over(e: String): String = s"(SELECT $e FROM $src)"
+    val k: String = over("CAST(round(sqrt(COUNT(*))) AS BIGINT)")
+    val probe: String =
+      over("GREATEST(1, CAST(round(round(sqrt(COUNT(*))) / 4.0) AS BIGINT))")
+    val sample: String = over("256 * CAST(round(sqrt(COUNT(*))) AS BIGINT)")
+    val groups: String = over("GREATEST(1, CAST(round(sqrt(CAST(round(" +
+      "sqrt(COUNT(*))) AS DOUBLE))) AS BIGINT))")
+  }
+
+  /** `name` (cid, cv): the first `limitSql` rows of `src` in
+    * (md5(vec_id), vec_id) order — the seeded codebook init. */
+  private def seedCte(name: String, limitSql: String,
+                      src: String = "q"): String =
+    s"""$name AS (
        | SELECT cid, cv FROM (
        |  SELECT vec_id AS cid, qv AS cv,
        |   row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
        |     vec_id) AS srn
-       |  FROM samp) t WHERE srn <= $kSql),
+       |  FROM $src) t WHERE srn <= $limitSql)""".stripMargin
+
+  /** `name` (vec_id, qv, cid): each row of `src` with its nearest
+    * centroid of `cents` (exact L2, lowest cid on ties). `src` is
+    * aliased q unless `aliased` is false (v09's codebook reads q bare). */
+  private def assignCte(name: String, cents: String, src: String = "q",
+                        aliased: Boolean = true): String = {
+    val from = if (aliased) s"$src q" else src
+    s"""$name AS (
+       | SELECT vec_id, qv, cid FROM (
+       |  SELECT q.vec_id, q.qv, c.cid,
+       |   row_number() OVER (PARTITION BY q.vec_id
+       |     ORDER BY ${duckL2("q.qv", "c.cv")}, c.cid) AS rn
+       |  FROM $from CROSS JOIN $cents c) t WHERE rn = 1)""".stripMargin
+  }
+
+  /** One Lloyd update over the assignment `assigned`: per-dim floor
+    * means (`dimsName`, `dimsName`s) re-projected onto the integer
+    * sphere as `centsName` (cid, cv). */
+  private def updateCte(dimsName: String, centsName: String,
+                        assigned: String): String =
+    s"""$dimsName AS (
+       | SELECT cid, dim,
+       |  CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS mval
+       | FROM (SELECT cid, generate_subscripts(qv, 1) AS dim,
+       |        unnest(qv) AS v FROM $assigned) t
+       | GROUP BY cid, dim),
+       |${dimsName}s AS (
+       | SELECT cid, list(mval ORDER BY dim) AS mv,
+       |  CAST(SUM(mval * mval) AS BIGINT) AS ss
+       | FROM $dimsName GROUP BY cid),
+       |$centsName AS (
+       | SELECT cid, list_transform(mv, m -> CASE WHEN ss = 0
+       |   THEN CAST(0 AS BIGINT)
+       |   ELSE CAST(round(CAST(m AS DOUBLE) / sqrt(CAST(ss AS DOUBLE)) * 1000) AS BIGINT) END) AS cv
+       | FROM ${dimsName}s)""".stripMargin
+
+  /** v09's K = 16 codebook: `seed` (the 16 md5-first vectors of `q`)
+    * and `t` Lloyd rounds a_i → u_i → `c<t>`. */
+  private def lloyd16Ctes(t: Int): String =
+    ("""seed AS (
+       | SELECT vec_id AS cid, qv AS cv FROM q
+       | ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16)"""
+      .stripMargin +: (1 to t).map { i =>
+        val prev = if (i == 1) "seed" else s"c${i - 1}"
+        s"${assignCte(s"a$i", prev, aliased = false)},\n" +
+          updateCte(s"u$i", s"c$i", s"a$i")
+      }).mkString(",\n")
+
+  /** The √N codebook `d3` trained T = 3 over `samp`, the bounded
+    * md5-first `sample` rows of `src` the engine trains on. */
+  private def sqrtNCodebookCtes(src: String): String = {
+    val n = new SqrtNSql(src)
+    s"""samp AS (
+       | SELECT vec_id, qv FROM (
+       |  SELECT vec_id, qv,
+       |   row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
+       |     vec_id) AS srn
+       |  FROM $src) t WHERE srn <= ${n.sample}),
+       |${seedCte("seedsq", n.k, "samp")},
        |${assignCte("b1", "seedsq", "samp")},
        |${updateCte("w1", "d1", "b1")},
        |${assignCte("b2", "d1", "samp")},
        |${updateCte("w2", "d2", "b2")},
        |${assignCte("b3", "d2", "samp")},
-       |${updateCte("w3", "d3", "b3")},
-       |centq AS (SELECT cid AS vec_id, cv AS qv FROM d3),
-       |gseed AS (
-       | SELECT cid, cv FROM (
-       |  SELECT vec_id AS cid, qv AS cv,
-       |   row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-       |     vec_id) AS srn
-       |  FROM centq) t WHERE srn <= $gSql),
+       |${updateCte("w3", "d3", "b3")}""".stripMargin
+  }
+
+  /** The coarse level over `d3` (see [[twoLevelAssign]]): a 2-round
+    * Lloyd over the centroids themselves (`centq`) into `gc2`, sized
+    * from `src`'s N, and `fmap` (fcid → gid). */
+  private def coarseGroupCtes(src: String): String =
+    s"""centq AS (SELECT cid AS vec_id, cv AS qv FROM d3),
+       |${seedCte("gseed", new SqrtNSql(src).groups, "centq")},
        |${assignCte("g1", "gseed", "centq")},
        |${updateCte("gw1", "gc1", "g1")},
        |${assignCte("g2", "gc1", "centq")},
        |${updateCte("gw2", "gc2", "g2")},
        |${assignCte("fmapraw", "gc2", "centq")},
-       |fmap AS (SELECT vec_id AS fcid, cid AS gid FROM fmapraw),
-       |${assignCte("routb", "gc2", "qb")},
-       |${assignCte("routd", "gc2", "qd")},
-       |afb AS (
+       |fmap AS (SELECT vec_id AS fcid, cid AS gid FROM fmapraw)"""
+      .stripMargin
+
+  /** `name` (c_id, c_cell): the fine `d3` cell of each `routed` row,
+    * searched within its routed group (every `d3` cell when the group
+    * holds none). */
+  private def routedCellCte(name: String, routed: String): String =
+    s"""$name AS (
        | SELECT vec_id AS c_id, cell AS c_cell FROM (
        |  SELECT r.vec_id, c.cid AS cell,
        |   row_number() OVER (PARTITION BY r.vec_id
-       |     ORDER BY ${dist("r.qv", "c.cv")}, c.cid) AS rn
-       |  FROM routb r JOIN fmap fm ON r.cid = fm.gid
+       |     ORDER BY ${duckL2("r.qv", "c.cv")}, c.cid) AS rn
+       |  FROM $routed r JOIN fmap fm ON r.cid = fm.gid
        |   JOIN d3 c ON fm.fcid = c.cid) t WHERE rn = 1
        | UNION ALL
        | SELECT vec_id AS c_id, cell AS c_cell FROM (
        |  SELECT r.vec_id, c.cid AS cell,
        |   row_number() OVER (PARTITION BY r.vec_id
-       |     ORDER BY ${dist("r.qv", "c.cv")}, c.cid) AS rn
-       |  FROM routb r CROSS JOIN d3 c
-       |  WHERE r.cid NOT IN (SELECT gid FROM fmap)) t WHERE rn = 1),
-       |afd AS (
-       | SELECT vec_id AS c_id, cell AS c_cell FROM (
-       |  SELECT r.vec_id, c.cid AS cell,
-       |   row_number() OVER (PARTITION BY r.vec_id
-       |     ORDER BY ${dist("r.qv", "c.cv")}, c.cid) AS rn
-       |  FROM routd r JOIN fmap fm ON r.cid = fm.gid
-       |   JOIN d3 c ON fm.fcid = c.cid) t WHERE rn = 1
-       | UNION ALL
-       | SELECT vec_id AS c_id, cell AS c_cell FROM (
-       |  SELECT r.vec_id, c.cid AS cell,
-       |   row_number() OVER (PARTITION BY r.vec_id
-       |     ORDER BY ${dist("r.qv", "c.cv")}, c.cid) AS rn
-       |  FROM routd r CROSS JOIN d3 c
-       |  WHERE r.cid NOT IN (SELECT gid FROM fmap)) t WHERE rn = 1),
-       |cells AS (
-       | SELECT c_id, c_cell, 'base' AS seg FROM afb
-       | UNION ALL
-       | SELECT c_id, c_cell, 'delta' AS seg FROM afd),
-       |probes AS (
+       |     ORDER BY ${duckL2("r.qv", "c.cv")}, c.cid) AS rn
+       |  FROM $routed r CROSS JOIN d3 c
+       |  WHERE r.cid NOT IN (SELECT gid FROM fmap)) t WHERE rn = 1)"""
+      .stripMargin
+
+  /** `name` (c_id, c_cell): each `q` row's flat nearest cell of `cents`. */
+  private def flatCellCte(name: String, cents: String): String =
+    s"""$name AS (
+       | SELECT vec_id AS c_id, cid AS c_cell FROM (
+       |  SELECT q.vec_id, c.cid,
+       |   row_number() OVER (PARTITION BY q.vec_id
+       |     ORDER BY ${duckL2("q.qv", "c.cv")}, c.cid) AS rn
+       |  FROM q CROSS JOIN $cents c) t WHERE rn = 1)""".stripMargin
+
+  /** `probes` (the `probeSql` nearest `d3` cells of each `q` row
+    * matching `queryPred`) and `reranked` (q_id, c_id[, seg], sim, rnk):
+    * exact cosine over the members of `cells` in the probed cells. */
+  private def probeRerankCtes(queryPred: String, probeSql: String,
+                              cells: String, seg: Boolean): String =
+    s"""probes AS (
        | SELECT q_id, p_cell FROM (
        |  SELECT q.vec_id AS q_id, c.cid AS p_cell,
        |   row_number() OVER (PARTITION BY q.vec_id
-       |     ORDER BY ${dist("q.qv", "c.cv")}, c.cid) AS prn
+       |     ORDER BY ${duckL2("q.qv", "c.cv")}, c.cid) AS prn
        |  FROM q CROSS JOIN d3 c
-       |  WHERE $probePred) t
-       | WHERE prn <= $pSql),
+       |  WHERE $queryPred) t
+       | WHERE prn <= $probeSql),
        |reranked AS (
-       | SELECT p.q_id, a.c_id, a.seg,
+       | SELECT p.q_id, a.c_id,${if (seg) " a.seg," else ""}
        |  ${cos("qe.embedding", "ce.embedding")} AS sim,
        |  row_number() OVER (PARTITION BY p.q_id ORDER BY
        |    ${cos("qe.embedding", "ce.embedding")} DESC, a.c_id) AS rnk
        | FROM probes p
        |  JOIN embeddings qe ON p.q_id = qe.vec_id
-       |  JOIN cells a ON p.p_cell = a.c_cell AND p.q_id <> a.c_id
+       |  JOIN $cells a ON p.p_cell = a.c_cell AND p.q_id <> a.c_id
        |  JOIN embeddings ce ON a.c_id = ce.vec_id)""".stripMargin
-  }
+
+  /** The held-out query ranges of the v-family oracles (alias q). */
+  private val HeldOutSql = "q.vec_id >= 100 AND q.vec_id < 120"
+  private val First20Sql = "q.vec_id < 20"
+
+  /** `name` (q_id, c_id, sim): exact cosine of each query matching
+    * `pred` (alias q) against every other vector. */
+  private def exactPairsCte(name: String, pred: String): String =
+    s"""$name AS (
+       | SELECT q.vec_id AS q_id, c.vec_id AS c_id,
+       |  ${cos("q.embedding", "c.embedding")} AS sim
+       | FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+       | WHERE $pred)""".stripMargin
+
+  /** `tpairs` then `truth` (q_id, c_id): the exact top-5 (sim DESC,
+    * c_id) of each query matching `pred`. `derived` is the ranked
+    * subquery's alias text ("" or " t"). */
+  private def truthCtes(pred: String, derived: String = ""): String =
+    s"""${exactPairsCte("tpairs", pred)},
+       |truth AS (
+       | SELECT q_id, c_id FROM (
+       |  SELECT q_id, c_id,
+       |   row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rnk
+       |  FROM tpairs)$derived WHERE rnk <= 5)""".stripMargin
+
+  /** `name` (q_id, `hits`): how many of each query's `truth` rows the
+    * relation `approx` (q_id, c_id) holds. */
+  private def hitsCte(name: String, hits: String, approx: String): String =
+    s"""$name AS (
+       | SELECT t.q_id, CAST(COUNT(a.c_id) AS BIGINT) AS $hits
+       | FROM truth t LEFT JOIN $approx a
+       |  ON t.q_id = a.q_id AND t.c_id = a.c_id GROUP BY t.q_id)"""
+      .stripMargin
+
+  /** One held-out IVF leg over codebook `cents` probing `probeSql`
+    * cells (v09, v17): candidates, top-5 and hits, suffixed `sfx`. */
+  private def ivfLegCtes(sfx: String, cents: String,
+                         probeSql: String): String =
+    s"""${flatCellCte(s"af_$sfx", cents)},
+       |probes_$sfx AS (
+       | SELECT q_id, p_cell FROM (
+       |  SELECT q.vec_id AS q_id, c.cid AS p_cell,
+       |   row_number() OVER (PARTITION BY q.vec_id
+       |     ORDER BY ${duckL2("q.qv", "c.cv")}, c.cid) AS prn
+       |  FROM q CROSS JOIN $cents c
+       |  WHERE $HeldOutSql) t
+       | WHERE prn <= $probeSql),
+       |reranked_$sfx AS (
+       | SELECT p.q_id, a.c_id,
+       |  row_number() OVER (PARTITION BY p.q_id ORDER BY
+       |    ${cos("qe.embedding", "ce.embedding")} DESC, a.c_id) AS rnk
+       | FROM probes_$sfx p
+       |  JOIN embeddings qe ON p.q_id = qe.vec_id
+       |  JOIN af_$sfx a ON p.p_cell = a.c_cell AND p.q_id <> a.c_id
+       |  JOIN embeddings ce ON a.c_id = ce.vec_id),
+       |ncand_$sfx AS (
+       | SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_cand_$sfx
+       | FROM reranked_$sfx GROUP BY q_id),
+       |top5_$sfx AS (
+       | SELECT q_id, c_id FROM reranked_$sfx WHERE rnk <= 5),
+       |${hitsCte(s"h_$sfx", s"hits_$sfx", s"top5_$sfx")}""".stripMargin
+
+  /** DuckDB twin of the full-corpus IVF index (v18, and v25b's vector
+    * shortlist): the √N two-level codebook over the bounded sample,
+    * every vector routed to its cell, K/4 cells probed for the queries
+    * matching `queryPred` (alias q), exact-cosine re-rank. The chain (no
+    * WITH prefix) ends with `reranked` (q_id, c_id, sim, rnk). The index
+    * is a materialized view, so the twin recomputes it inline. */
+  private def annIndexCtes(queryPred: String): String =
+    s"""$quantCte,
+       |${sqrtNCodebookCtes("q")},
+       |${coarseGroupCtes("q")},
+       |${assignCte("routedq", "gc2")},
+       |${routedCellCte("af", "routedq")},
+       |${probeRerankCtes(queryPred, new SqrtNSql("q").probe, "af",
+          seg = false)}""".stripMargin
+
+  /** DuckDB twin of delta-segmented ANN serving (v19 and d33's serving
+    * composite): the codebook, sample and sizing come from the base
+    * slice `basePred`; base and frozen-codebook delta (`deltaPred`)
+    * rows take their two-level cells with a segment tag; queries
+    * matching `probePred` (alias q) probe and exact-cosine re-rank.
+    * Ends in `reranked` (q_id, c_id, seg, sim, rnk); callers append their
+    * own final SELECT. The predicates mirror
+    * [[ensureAnnDeltaIndexWhere]]'s slices. */
+  private[graft] def annServeCtes(basePred: String, deltaPred: String,
+                                  probePred: String): String =
+    s"""$quantCte,
+       |qb AS (SELECT vec_id, qv FROM q WHERE $basePred),
+       |qd AS (SELECT vec_id, qv FROM q WHERE $deltaPred),
+       |${sqrtNCodebookCtes("qb")},
+       |${coarseGroupCtes("qb")},
+       |${assignCte("routb", "gc2", "qb")},
+       |${assignCte("routd", "gc2", "qd")},
+       |${routedCellCte("afb", "routb")},
+       |${routedCellCte("afd", "routd")},
+       |cells AS (
+       | SELECT c_id, c_cell, 'base' AS seg FROM afb
+       | UNION ALL
+       | SELECT c_id, c_cell, 'delta' AS seg FROM afd),
+       |${probeRerankCtes(probePred, new SqrtNSql("qb").probe, "cells",
+          seg = true)}""".stripMargin
+
+  /** v19's serving chain: base slice vec_id % 7 <> 0, delta slice
+    * vec_id % 7 = 0, held-out queries. */
+  private def v19ServeCtes: String =
+    annServeCtes("vec_id % 7 <> 0", "vec_id % 7 = 0", HeldOutSql)
 
   private val duckBucket =
     (0 until 4).map { j =>
@@ -2485,11 +2512,7 @@ object Similarity {
          |FROM kept WHERE drnk <= 5 ORDER BY q_id, drnk""".stripMargin,
 
     "v01_knn_brute" ->
-      s"""WITH pairs AS (
-         | SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         |  ${cos("q.embedding", "c.embedding")} AS sim
-         | FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-         | WHERE q.vec_id < 20),
+      s"""WITH ${exactPairsCte("pairs", First20Sql)},
          |ranked AS (
          | SELECT q_id, c_id, sim,
          |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS BIGINT) AS rnk
@@ -2582,16 +2605,7 @@ object Similarity {
          | SELECT vec_id, embedding, $duckBucket AS bucket,
          |  ($duckBucket) % 4 AS bucket2
          | FROM embeddings),
-         |tpairs AS (
-         | SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         |  ${cos("q.embedding", "c.embedding")} AS sim
-         | FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-         | WHERE q.vec_id < 20),
-         |truth AS (
-         | SELECT q_id, c_id FROM (
-         |  SELECT q_id, c_id,
-         |   row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rnk
-         |  FROM tpairs) WHERE rnk <= 5),
+         |${truthCtes(First20Sql)},
          |a4 AS (
          | SELECT q_id, c_id FROM (
          |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
@@ -2608,14 +2622,8 @@ object Similarity {
          |  FROM withb q JOIN withb c
          |   ON q.bucket2 = c.bucket2 AND q.vec_id <> c.vec_id
          |  WHERE q.vec_id < 20) WHERE rnk <= 5),
-         |h4 AS (
-         | SELECT t.q_id, CAST(COUNT(a.c_id) AS BIGINT) AS hits_4bit
-         | FROM truth t LEFT JOIN a4 a
-         |  ON t.q_id = a.q_id AND t.c_id = a.c_id GROUP BY t.q_id),
-         |h2 AS (
-         | SELECT t.q_id, CAST(COUNT(a.c_id) AS BIGINT) AS hits_2bit
-         | FROM truth t LEFT JOIN a2 a
-         |  ON t.q_id = a.q_id AND t.c_id = a.c_id GROUP BY t.q_id)
+         |${hitsCte("h4", "hits_4bit", "a4")},
+         |${hitsCte("h2", "hits_2bit", "a2")}
          |SELECT h4.q_id, hits_4bit, hits_2bit,
          | CAST(hits_4bit AS DOUBLE) / 5.0 AS recall_4bit,
          | CAST(hits_2bit AS DOUBLE) / 5.0 AS recall_2bit
@@ -2650,121 +2658,26 @@ object Similarity {
          | SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_cand
          | FROM reranked GROUP BY q_id),
          |top5 AS (SELECT q_id, c_id FROM reranked WHERE rnk <= 5),
-         |tpairs AS (
-         | SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         |  ${cos("q.embedding", "c.embedding")} AS sim
-         | FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-         | WHERE q.vec_id < 20),
-         |truth AS (
-         | SELECT q_id, c_id FROM (
-         |  SELECT q_id, c_id,
-         |   row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rnk
-         |  FROM tpairs) WHERE rnk <= 5),
-         |h AS (
-         | SELECT t.q_id, CAST(COUNT(a.c_id) AS BIGINT) AS hits_ivf
-         | FROM truth t LEFT JOIN top5 a
-         |  ON t.q_id = a.q_id AND t.c_id = a.c_id GROUP BY t.q_id)
+         |${truthCtes(First20Sql)},
+         |${hitsCte("h", "hits_ivf", "top5")}
          |SELECT h.q_id, n_cand, hits_ivf,
          | CAST(hits_ivf AS DOUBLE) / 5.0 AS recall_ivf
          |FROM h JOIN ncand ON h.q_id = ncand.q_id
          |ORDER BY h.q_id""".stripMargin,
 
-    "v09_ivf_trained" -> {
+    "v09_ivf_trained" ->
       // DuckDB twin of the T=2 integer spherical Lloyd training plus the
       // two-leg held-out harness, unrolled: every arithmetic step (int64
       // quantize on the normalized vector, exact L2, floor-mean +
       // integer-sphere re-projection) is order-invariant, so the trained
       // codebook is bit-identical.
-      def dist(a: String, b: String): String =
-        s"list_sum(list_transform(range(64), ii -> ($a[ii+1] - $b[ii+1]) * ($a[ii+1] - $b[ii+1])))"
-      def assignCte(name: String, cents: String): String =
-        s"""$name AS (
-           | SELECT vec_id, qv, cid FROM (
-           |  SELECT q.vec_id, q.qv, c.cid,
-           |   row_number() OVER (PARTITION BY q.vec_id
-           |     ORDER BY ${dist("q.qv", "c.cv")}, c.cid) AS rn
-           |  FROM q CROSS JOIN $cents c) t WHERE rn = 1)"""
-          .stripMargin
-      def legCtes(sfx: String, cents: String): String =
-        s"""af_$sfx AS (
-           | SELECT vec_id AS c_id, cid AS c_cell FROM (
-           |  SELECT q.vec_id, c.cid,
-           |   row_number() OVER (PARTITION BY q.vec_id
-           |     ORDER BY ${dist("q.qv", "c.cv")}, c.cid) AS rn
-           |  FROM q CROSS JOIN $cents c) t WHERE rn = 1),
-           |probes_$sfx AS (
-           | SELECT q_id, p_cell FROM (
-           |  SELECT q.vec_id AS q_id, c.cid AS p_cell,
-           |   row_number() OVER (PARTITION BY q.vec_id
-           |     ORDER BY ${dist("q.qv", "c.cv")}, c.cid) AS prn
-           |  FROM q CROSS JOIN $cents c
-           |  WHERE q.vec_id >= 100 AND q.vec_id < 120) t WHERE prn <= 4),
-           |reranked_$sfx AS (
-           | SELECT p.q_id, a.c_id,
-           |  row_number() OVER (PARTITION BY p.q_id ORDER BY
-           |    ${cos("qe.embedding", "ce.embedding")} DESC, a.c_id) AS rnk
-           | FROM probes_$sfx p
-           |  JOIN embeddings qe ON p.q_id = qe.vec_id
-           |  JOIN af_$sfx a ON p.p_cell = a.c_cell AND p.q_id <> a.c_id
-           |  JOIN embeddings ce ON a.c_id = ce.vec_id),
-           |ncand_$sfx AS (
-           | SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_cand_$sfx
-           | FROM reranked_$sfx GROUP BY q_id),
-           |top5_$sfx AS (
-           | SELECT q_id, c_id FROM reranked_$sfx WHERE rnk <= 5),
-           |h_$sfx AS (
-           | SELECT t.q_id, CAST(COUNT(a.c_id) AS BIGINT) AS hits_$sfx
-           | FROM truth t LEFT JOIN top5_$sfx a
-           |  ON t.q_id = a.q_id AND t.c_id = a.c_id GROUP BY t.q_id)"""
-          .stripMargin
-      def updateCte(dimsName: String, centsName: String,
-                    assigned: String): String =
-        s"""$dimsName AS (
-           | SELECT cid, dim,
-           |  CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS mval
-           | FROM (SELECT cid, generate_subscripts(qv, 1) AS dim,
-           |        unnest(qv) AS v FROM $assigned) t
-           | GROUP BY cid, dim),
-           |${dimsName}s AS (
-           | SELECT cid, list(mval ORDER BY dim) AS mv,
-           |  CAST(SUM(mval * mval) AS BIGINT) AS ss
-           | FROM $dimsName GROUP BY cid),
-           |$centsName AS (
-           | SELECT cid, list_transform(mv, m -> CASE WHEN ss = 0
-           |   THEN CAST(0 AS BIGINT)
-           |   ELSE CAST(round(CAST(m AS DOUBLE) / sqrt(CAST(ss AS DOUBLE)) * 1000) AS BIGINT) END) AS cv
-           | FROM ${dimsName}s)""".stripMargin
-      s"""WITH q AS (
-         | SELECT vec_id,
-         |  list_transform(ed, x -> CASE WHEN nrm = 0
-         |    THEN CAST(0 AS BIGINT)
-         |    ELSE CAST(round(x / nrm * 1000) AS BIGINT) END) AS qv
-         | FROM (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ed,
-         |   sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-         |        CAST(embedding AS DOUBLE[]))) AS nrm
-         |  FROM embeddings) tq),
-         |seed AS (
-         | SELECT vec_id AS cid, qv AS cv FROM q
-         | ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-         |${assignCte("a1", "seed")},
-         |${updateCte("u1", "c1", "a1")},
-         |${assignCte("a2", "c1")},
-         |${updateCte("u2", "c2", "a2")},
+      s"""WITH $quantCte,
+         |${lloyd16Ctes(2)},
          |fixedc AS (
          | SELECT vec_id AS cid, qv AS cv FROM q WHERE vec_id < 16),
-         |tpairs AS (
-         | SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         |  ${cos("q.embedding", "c.embedding")} AS sim
-         | FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-         | WHERE q.vec_id >= 100 AND q.vec_id < 120),
-         |truth AS (
-         | SELECT q_id, c_id FROM (
-         |  SELECT q_id, c_id,
-         |   row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rnk
-         |  FROM tpairs) WHERE rnk <= 5),
-         |${legCtes("fx", "fixedc")},
-         |${legCtes("tr", "c2")}
+         |${truthCtes(HeldOutSql)},
+         |${ivfLegCtes("fx", "fixedc", "4")},
+         |${ivfLegCtes("tr", "c2", "4")}
          |SELECT h_fx.q_id,
          | n_cand_fx, hits_fx, CAST(hits_fx AS DOUBLE) / 5.0 AS recall_fx,
          | n_cand_tr, hits_tr, CAST(hits_tr AS DOUBLE) / 5.0 AS recall_tr
@@ -2772,130 +2685,26 @@ object Similarity {
          | JOIN ncand_fx ON h_fx.q_id = ncand_fx.q_id
          | JOIN h_tr ON h_fx.q_id = h_tr.q_id
          | JOIN ncand_tr ON h_fx.q_id = ncand_tr.q_id
-         |ORDER BY h_fx.q_id""".stripMargin
-    },
+         |ORDER BY h_fx.q_id""".stripMargin,
 
-    "v17_ivf_sqrtn" -> {
-      // DuckDB twin of the K = round(√N) harness: v09's CTE builders
-      // with the codebook size and probe count as scalar subqueries
-      // over q (so the SQL needs no engine-side row count), the √N leg
-      // trained T=3 over the SAME bounded 256·K md5-sample the engine
-      // trains on (samp CTE — identical total order, identical
-      // row_number cutoff), so both codebooks stay bit-identical even
-      // where the sample is a strict subset of the corpus. Every
-      // arithmetic step is the same order-invariant integer form.
-      val kSql = "(SELECT CAST(round(sqrt(COUNT(*))) AS BIGINT) FROM q)"
-      val pSql = "(SELECT GREATEST(1, CAST(round(round(sqrt(COUNT(*))) / 4.0) AS BIGINT)) FROM q)"
-      val sSql = "(SELECT 256 * CAST(round(sqrt(COUNT(*))) AS BIGINT) FROM q)"
-      def dist(a: String, b: String): String =
-        s"list_sum(list_transform(range(64), ii -> ($a[ii+1] - $b[ii+1]) * ($a[ii+1] - $b[ii+1])))"
-      def seedCte(name: String, limitSql: String,
-                  src: String = "q"): String =
-        s"""$name AS (
-           | SELECT cid, cv FROM (
-           |  SELECT vec_id AS cid, qv AS cv,
-           |   row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-           |     vec_id) AS srn
-           |  FROM $src) t WHERE srn <= $limitSql)""".stripMargin
-      def assignCte(name: String, cents: String,
-                    src: String = "q"): String =
-        s"""$name AS (
-           | SELECT vec_id, qv, cid FROM (
-           |  SELECT q.vec_id, q.qv, c.cid,
-           |   row_number() OVER (PARTITION BY q.vec_id
-           |     ORDER BY ${dist("q.qv", "c.cv")}, c.cid) AS rn
-           |  FROM $src q CROSS JOIN $cents c) t WHERE rn = 1)"""
-          .stripMargin
-      def updateCte(dimsName: String, centsName: String,
-                    assigned: String): String =
-        s"""$dimsName AS (
-           | SELECT cid, dim,
-           |  CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS mval
-           | FROM (SELECT cid, generate_subscripts(qv, 1) AS dim,
-           |        unnest(qv) AS v FROM $assigned) t
-           | GROUP BY cid, dim),
-           |${dimsName}s AS (
-           | SELECT cid, list(mval ORDER BY dim) AS mv,
-           |  CAST(SUM(mval * mval) AS BIGINT) AS ss
-           | FROM $dimsName GROUP BY cid),
-           |$centsName AS (
-           | SELECT cid, list_transform(mv, m -> CASE WHEN ss = 0
-           |   THEN CAST(0 AS BIGINT)
-           |   ELSE CAST(round(CAST(m AS DOUBLE) / sqrt(CAST(ss AS DOUBLE)) * 1000) AS BIGINT) END) AS cv
-           | FROM ${dimsName}s)""".stripMargin
-      def legCtes(sfx: String, cents: String, probeSql: String): String =
-        s"""af_$sfx AS (
-           | SELECT vec_id AS c_id, cid AS c_cell FROM (
-           |  SELECT q.vec_id, c.cid,
-           |   row_number() OVER (PARTITION BY q.vec_id
-           |     ORDER BY ${dist("q.qv", "c.cv")}, c.cid) AS rn
-           |  FROM q CROSS JOIN $cents c) t WHERE rn = 1),
-           |probes_$sfx AS (
-           | SELECT q_id, p_cell FROM (
-           |  SELECT q.vec_id AS q_id, c.cid AS p_cell,
-           |   row_number() OVER (PARTITION BY q.vec_id
-           |     ORDER BY ${dist("q.qv", "c.cv")}, c.cid) AS prn
-           |  FROM q CROSS JOIN $cents c
-           |  WHERE q.vec_id >= 100 AND q.vec_id < 120) t
-           | WHERE prn <= $probeSql),
-           |reranked_$sfx AS (
-           | SELECT p.q_id, a.c_id,
-           |  row_number() OVER (PARTITION BY p.q_id ORDER BY
-           |    ${cos("qe.embedding", "ce.embedding")} DESC, a.c_id) AS rnk
-           | FROM probes_$sfx p
-           |  JOIN embeddings qe ON p.q_id = qe.vec_id
-           |  JOIN af_$sfx a ON p.p_cell = a.c_cell AND p.q_id <> a.c_id
-           |  JOIN embeddings ce ON a.c_id = ce.vec_id),
-           |ncand_$sfx AS (
-           | SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_cand_$sfx
-           | FROM reranked_$sfx GROUP BY q_id),
-           |top5_$sfx AS (
-           | SELECT q_id, c_id FROM reranked_$sfx WHERE rnk <= 5),
-           |h_$sfx AS (
-           | SELECT t.q_id, CAST(COUNT(a.c_id) AS BIGINT) AS hits_$sfx
-           | FROM truth t LEFT JOIN top5_$sfx a
-           |  ON t.q_id = a.q_id AND t.c_id = a.c_id GROUP BY t.q_id)"""
-          .stripMargin
-      s"""WITH q AS (
-         | SELECT vec_id,
-         |  list_transform(ed, x -> CASE WHEN nrm = 0
-         |    THEN CAST(0 AS BIGINT)
-         |    ELSE CAST(round(x / nrm * 1000) AS BIGINT) END) AS qv
-         | FROM (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ed,
-         |   sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-         |        CAST(embedding AS DOUBLE[]))) AS nrm
-         |  FROM embeddings) tq),
+    "v17_ivf_sqrtn" ->
+      // DuckDB twin of the K = round(√N) harness: the codebook size and
+      // probe count are scalar subqueries over q (so the SQL needs no
+      // engine-side row count), and the √N leg trains T=3 over the SAME
+      // bounded 256·K md5-sample the engine trains on (identical total
+      // order, identical row_number cutoff), so both codebooks stay
+      // bit-identical even where the sample is a strict subset of the
+      // corpus.
+      s"""WITH $quantCte,
          |${seedCte("seed16", "16")},
          |${assignCte("a1", "seed16")},
          |${updateCte("u1", "c1", "a1")},
          |${assignCte("a2", "c1")},
          |${updateCte("u2", "c2", "a2")},
-         |samp AS (
-         | SELECT vec_id, qv FROM (
-         |  SELECT vec_id, qv,
-         |   row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-         |     vec_id) AS srn
-         |  FROM q) t WHERE srn <= $sSql),
-         |${seedCte("seedsq", kSql, "samp")},
-         |${assignCte("b1", "seedsq", "samp")},
-         |${updateCte("w1", "d1", "b1")},
-         |${assignCte("b2", "d1", "samp")},
-         |${updateCte("w2", "d2", "b2")},
-         |${assignCte("b3", "d2", "samp")},
-         |${updateCte("w3", "d3", "b3")},
-         |tpairs AS (
-         | SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         |  ${cos("q.embedding", "c.embedding")} AS sim
-         | FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-         | WHERE q.vec_id >= 100 AND q.vec_id < 120),
-         |truth AS (
-         | SELECT q_id, c_id FROM (
-         |  SELECT q_id, c_id,
-         |   row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rnk
-         |  FROM tpairs) WHERE rnk <= 5),
-         |${legCtes("16", "c2", "4")},
-         |${legCtes("sq", "d3", pSql)}
+         |${sqrtNCodebookCtes("q")},
+         |${truthCtes(HeldOutSql)},
+         |${ivfLegCtes("16", "c2", "4")},
+         |${ivfLegCtes("sq", "d3", new SqrtNSql("q").probe)}
          |SELECT h_16.q_id,
          | n_cand_16, hits_16, CAST(hits_16 AS DOUBLE) / 5.0 AS recall_16,
          | n_cand_sq, hits_sq, CAST(hits_sq AS DOUBLE) / 5.0 AS recall_sq
@@ -2903,96 +2712,29 @@ object Similarity {
          | JOIN ncand_16 ON h_16.q_id = ncand_16.q_id
          | JOIN h_sq ON h_16.q_id = h_sq.q_id
          | JOIN ncand_sq ON h_16.q_id = ncand_sq.q_id
-         |ORDER BY h_16.q_id""".stripMargin
-    },
+         |ORDER BY h_16.q_id""".stripMargin,
 
-    // v29: the v17 √N-codebook CTEs, a tiny 2-round coarse Lloyd over
-    // the K centroids themselves, two-level routing (coarse row_number
-    // argmin, then fine argmin restricted to the routed group), flat
-    // argmin on the 1/97 sample only — all the same integer arithmetic.
-    "v29_two_level_assign" -> {
-      val kSql = "(SELECT CAST(round(sqrt(COUNT(*))) AS BIGINT) FROM q)"
-      val sSql = "(SELECT 256 * CAST(round(sqrt(COUNT(*))) AS BIGINT) FROM q)"
-      val gSql = "(SELECT GREATEST(1, CAST(round(sqrt(CAST(round(sqrt(" +
-        "COUNT(*))) AS DOUBLE))) AS BIGINT)) FROM q)"
-      def dist(a: String, b: String): String =
-        s"list_sum(list_transform(range(64), ii -> ($a[ii+1] - $b[ii+1]) * ($a[ii+1] - $b[ii+1])))"
-      def seedCte(name: String, limitSql: String, src: String): String =
-        s"""$name AS (
-           | SELECT cid, cv FROM (
-           |  SELECT vec_id AS cid, qv AS cv,
-           |   row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-           |     vec_id) AS srn
-           |  FROM $src) t WHERE srn <= $limitSql)""".stripMargin
-      def assignCte(name: String, cents: String, src: String): String =
-        s"""$name AS (
-           | SELECT vec_id, qv, cid FROM (
-           |  SELECT q.vec_id, q.qv, c.cid,
-           |   row_number() OVER (PARTITION BY q.vec_id
-           |     ORDER BY ${dist("q.qv", "c.cv")}, c.cid) AS rn
-           |  FROM $src q CROSS JOIN $cents c) t WHERE rn = 1)"""
-          .stripMargin
-      def updateCte(dimsName: String, centsName: String,
-                    assigned: String): String =
-        s"""$dimsName AS (
-           | SELECT cid, dim,
-           |  CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS mval
-           | FROM (SELECT cid, generate_subscripts(qv, 1) AS dim,
-           |        unnest(qv) AS v FROM $assigned) t
-           | GROUP BY cid, dim),
-           |${dimsName}s AS (
-           | SELECT cid, list(mval ORDER BY dim) AS mv,
-           |  CAST(SUM(mval * mval) AS BIGINT) AS ss
-           | FROM $dimsName GROUP BY cid),
-           |$centsName AS (
-           | SELECT cid, list_transform(mv, m -> CASE WHEN ss = 0
-           |   THEN CAST(0 AS BIGINT)
-           |   ELSE CAST(round(CAST(m AS DOUBLE) / sqrt(CAST(ss AS DOUBLE)) * 1000) AS BIGINT) END) AS cv
-           | FROM ${dimsName}s)""".stripMargin
-      s"""WITH q AS (
-         | SELECT vec_id,
-         |  list_transform(ed, x -> CASE WHEN nrm = 0
-         |    THEN CAST(0 AS BIGINT)
-         |    ELSE CAST(round(x / nrm * 1000) AS BIGINT) END) AS qv
-         | FROM (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ed,
-         |   sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-         |        CAST(embedding AS DOUBLE[]))) AS nrm
-         |  FROM embeddings) tq),
-         |samp AS (
-         | SELECT vec_id, qv FROM (
-         |  SELECT vec_id, qv,
-         |   row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-         |     vec_id) AS srn
-         |  FROM q) t WHERE srn <= $sSql),
-         |${seedCte("seedsq", kSql, "samp")},
-         |${assignCte("b1", "seedsq", "samp")},
-         |${updateCte("w1", "d1", "b1")},
-         |${assignCte("b2", "d1", "samp")},
-         |${updateCte("w2", "d2", "b2")},
-         |${assignCte("b3", "d2", "samp")},
-         |${updateCte("w3", "d3", "b3")},
-         |centq AS (SELECT cid AS vec_id, cv AS qv FROM d3),
-         |${seedCte("gseed", gSql, "centq")},
-         |${assignCte("g1", "gseed", "centq")},
-         |${updateCte("gw1", "gc1", "g1")},
-         |${assignCte("g2", "gc1", "centq")},
-         |${updateCte("gw2", "gc2", "g2")},
-         |${assignCte("fmapraw", "gc2", "centq")},
-         |fmap AS (SELECT vec_id AS fcid, cid AS gid FROM fmapraw),
+    // v29: the v17 √N codebook, the coarse 2-round Lloyd over its
+    // centroids, two-level routing (coarse argmin, then fine argmin
+    // restricted to the routed group), flat argmin on the 1/97 sample
+    // only — all the same integer arithmetic.
+    "v29_two_level_assign" ->
+      s"""WITH $quantCte,
+         |${sqrtNCodebookCtes("q")},
+         |${coarseGroupCtes("q")},
          |${assignCte("routed", "gc2", "q")},
          |two AS (
          | SELECT vec_id, gid, cell FROM (
          |  SELECT r.vec_id, r.cid AS gid, c.cid AS cell,
          |   row_number() OVER (PARTITION BY r.vec_id
-         |     ORDER BY ${dist("r.qv", "c.cv")}, c.cid) AS rn
+         |     ORDER BY ${duckL2("r.qv", "c.cv")}, c.cid) AS rn
          |  FROM routed r JOIN fmap fm ON r.cid = fm.gid
          |   JOIN d3 c ON fm.fcid = c.cid) t WHERE rn = 1
          | UNION ALL
          | SELECT vec_id, gid, cell FROM (
          |  SELECT r.vec_id, r.cid AS gid, c.cid AS cell,
          |   row_number() OVER (PARTITION BY r.vec_id
-         |     ORDER BY ${dist("r.qv", "c.cv")}, c.cid) AS rn
+         |     ORDER BY ${duckL2("r.qv", "c.cv")}, c.cid) AS rn
          |  FROM routed r CROSS JOIN d3 c
          |  WHERE r.cid NOT IN (SELECT gid FROM fmap)) t WHERE rn = 1),
          |sampv AS (SELECT vec_id, qv FROM q WHERE vec_id % 97 = 0),
@@ -3005,46 +2747,30 @@ object Similarity {
          | CAST(SUM(CASE WHEN two.cell = f.cid THEN 1 ELSE 0 END)
          |   AS BIGINT) AS n_agree
          |FROM two LEFT JOIN flat f ON two.vec_id = f.vec_id
-         |GROUP BY two.gid ORDER BY two.gid""".stripMargin
-    },
+         |GROUP BY two.gid ORDER BY two.gid""".stripMargin,
 
-    "v19_delta_ann" -> {
-      // DuckDB twin of the delta-append serving path: identical to
-      // v18's inline recomputation except the codebook/sample/sizing
-      // derive from the BASE slice (vec_id % 7 <> 0) and the cell set
-      // is the union of the base assignment and the frozen-codebook
-      // delta assignment, each tagged with its segment. The CTE chain
-      // is the shared [[annServeCtes]] builder (d33's serving
-      // composite reuses it with d23's ingest-day slices).
-      s"""WITH ${annServeCtes("vec_id % 7 <> 0", "vec_id % 7 = 0",
-          "q.vec_id >= 100 AND q.vec_id < 120")}
+    // v19's delta-append serving path: [[v19ServeCtes]].
+    "v19_delta_ann" ->
+      s"""WITH $v19ServeCtes
          |SELECT q_id, c_id, CAST(rnk AS BIGINT) AS rnk, sim, seg
          |FROM reranked WHERE rnk <= 5
-         |ORDER BY q_id, rnk""".stripMargin
-    },
+         |ORDER BY q_id, rnk""".stripMargin,
 
-    "v19b_ann_compaction" -> {
-      // Compaction is a view change, not a semantic one: the compacted
-      // probe must return v19's rows exactly, minus the provenance the
-      // fold erases — so the twin is v19's CTE chain without seg.
-      s"""WITH ${annServeCtes("vec_id % 7 <> 0", "vec_id % 7 = 0",
-          "q.vec_id >= 100 AND q.vec_id < 120")}
+    // Compaction is a view change, not a semantic one: the compacted
+    // probe must return v19's rows exactly, minus the provenance the
+    // fold erases — so the twin is v19's CTE chain without seg.
+    "v19b_ann_compaction" ->
+      s"""WITH $v19ServeCtes
          |SELECT q_id, c_id, CAST(rnk AS BIGINT) AS rnk, sim
          |FROM reranked WHERE rnk <= 5
-         |ORDER BY q_id, rnk""".stripMargin
-    },
+         |ORDER BY q_id, rnk""".stripMargin,
 
-    "v23_delta_recall" -> {
-      // v19's serving CTEs (the approximate answer) joined against an
-      // inline v01-style brute-force truth over the same query slice.
-      s"""WITH ${annServeCtes("vec_id % 7 <> 0", "vec_id % 7 = 0",
-          "q.vec_id >= 100 AND q.vec_id < 120")},
+    // v19's serving CTEs (the approximate answer) joined against an
+    // inline v01-style brute-force truth over the same query slice.
+    "v23_delta_recall" ->
+      s"""WITH $v19ServeCtes,
          |approx AS (SELECT q_id, c_id FROM reranked WHERE rnk <= 5),
-         |tp AS (
-         | SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         |  ${cos("q.embedding", "c.embedding")} AS sim
-         | FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-         | WHERE q.vec_id >= 100 AND q.vec_id < 120),
+         |${exactPairsCte("tp", HeldOutSql)},
          |tr AS (
          | SELECT q_id, c_id,
          |  CASE WHEN c_id % 7 = 0 THEN 1 ELSE 0 END AS is_delta,
@@ -3059,23 +2785,17 @@ object Similarity {
          | CAST(COUNT(a.c_id) AS DOUBLE) / 5.0 AS recall
          |FROM truth t LEFT JOIN approx a
          | ON t.q_id = a.q_id AND t.c_id = a.c_id
-         |GROUP BY t.q_id ORDER BY t.q_id""".stripMargin
-    },
+         |GROUP BY t.q_id ORDER BY t.q_id""".stripMargin,
 
-    "v30_retrain_gate" -> {
-      // DuckDB twin of the retrain gate: v23's serving+truth chain and
-      // v28's int8 chain recomputed inline, suite-level integer sums,
-      // and the IDENTICAL pinned-threshold cross-multiplications —
-      // both engines derive the decision from exact integer
-      // comparisons, so the verdict string is hash-stable.
-      s"""WITH ${annServeCtes("vec_id % 7 <> 0", "vec_id % 7 = 0",
-          "q.vec_id >= 100 AND q.vec_id < 120")},
+    // DuckDB twin of the retrain gate: v23's serving+truth chain and
+    // v28's int8 chain recomputed inline, suite-level integer sums,
+    // and the IDENTICAL pinned-threshold cross-multiplications — both
+    // engines derive the decision from exact integer comparisons, so
+    // the verdict string is hash-stable.
+    "v30_retrain_gate" ->
+      s"""WITH $v19ServeCtes,
          |approx AS (SELECT q_id, c_id FROM reranked WHERE rnk <= 5),
-         |tp AS (
-         | SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         |  ${cos("q.embedding", "c.embedding")} AS sim
-         | FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-         | WHERE q.vec_id >= 100 AND q.vec_id < 120),
+         |${exactPairsCte("tp", HeldOutSql)},
          |tr AS (
          | SELECT q_id, c_id,
          |  CASE WHEN c_id % 7 = 0 THEN 1 ELSE 0 END AS is_delta,
@@ -3091,11 +2811,7 @@ object Similarity {
          | FROM truth t LEFT JOIN approx a
          |  ON t.q_id = a.q_id AND t.c_id = a.c_id
          | GROUP BY t.q_id),
-         |pf AS (
-         | SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         |  ${cos("q.embedding", "c.embedding")} AS sim
-         | FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-         | WHERE q.vec_id < 20),
+         |${exactPairsCte("pf", First20Sql)},
          |tf AS (
          | SELECT q_id, c_id,
          |  CAST(row_number() OVER (PARTITION BY q_id
@@ -3160,14 +2876,13 @@ object Similarity {
          |    $RetrainInt8MinPct * 5 * n_q_int8
          |    AND sum_top1 * 100 >= $RetrainTop1MinPct * n_q_int8
          |    THEN 1 ELSE 0 END AS BIGINT) AS int8_ok
-         | FROM dagg CROSS JOIN iagg) z""".stripMargin
-    },
+         | FROM dagg CROSS JOIN iagg) z""".stripMargin,
 
     "v18_indexed_ann" ->
       // DuckDB twin of the indexed serving path (CTE chain shared with
       // v25b's vector shortlist via [[annIndexCtes]]): probe K/4
       // cells, exact-cosine re-rank, emit each query's top 5.
-      s"""WITH ${annIndexCtes("q.vec_id >= 100 AND q.vec_id < 120")}
+      s"""WITH ${annIndexCtes(HeldOutSql)}
          |SELECT q_id, c_id, CAST(rnk AS BIGINT) AS rnk, sim
          |FROM reranked WHERE rnk <= 5
          |ORDER BY q_id, rnk""".stripMargin,
@@ -3188,7 +2903,7 @@ object Similarity {
       | WHERE vec_id >= 100 AND vec_id < 120),
       |dtab AS (
       | SELECT q.q_id, q.m, c.code,
-      |  CAST(${pqDist("q.sub", "c.cv")} AS BIGINT) AS d
+      |  CAST(${duckL2("q.sub", "c.cv", PqSub)} AS BIGINT) AS d
       | FROM qsubs q JOIN cb c ON q.m = c.m),
       |adc AS (
       | SELECT d.q_id, k.vec_id, CAST(SUM(d.d) AS BIGINT) AS adc_dist
@@ -3201,16 +2916,7 @@ object Similarity {
       |     ORDER BY adc_dist, vec_id) AS rn
       |  FROM adc) t WHERE rn <= $PqShortlist),
       |top5 AS (SELECT q_id, vec_id, adc_dist FROM short WHERE rn <= 5),
-      |tpairs AS (
-      | SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-      |  ${cos("q.embedding", "c.embedding")} AS sim
-      | FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-      | WHERE q.vec_id >= 100 AND q.vec_id < 120),
-      |truth AS (
-      | SELECT q_id, c_id FROM (
-      |  SELECT q_id, c_id,
-      |   row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rnk
-      |  FROM tpairs) t WHERE rnk <= 5),
+      |${truthCtes(HeldOutSql, " t")},
       |rr5 AS (
       | SELECT q_id, c_id FROM (
       |  SELECT s.q_id, s.vec_id AS c_id,
@@ -3219,15 +2925,8 @@ object Similarity {
       |  FROM short s
       |   JOIN embeddings qe ON s.q_id = qe.vec_id
       |   JOIN embeddings ce ON s.vec_id = ce.vec_id) t WHERE rrk <= 5),
-      |h AS (
-      | SELECT t.q_id, CAST(COUNT(a.c_id) AS BIGINT) AS hits_adc
-      | FROM truth t LEFT JOIN
-      |  (SELECT q_id, vec_id AS c_id FROM top5) a
-      |  ON t.q_id = a.q_id AND t.c_id = a.c_id GROUP BY t.q_id),
-      |hr AS (
-      | SELECT t.q_id, CAST(COUNT(a.c_id) AS BIGINT) AS hits_rr
-      | FROM truth t LEFT JOIN rr5 a
-      |  ON t.q_id = a.q_id AND t.c_id = a.c_id GROUP BY t.q_id),
+      |${hitsCte("h", "hits_adc", "(SELECT q_id, vec_id AS c_id FROM top5)")},
+      |${hitsCte("hr", "hits_rr", "rr5")},
       |asum AS (
       | SELECT q_id, CAST(SUM(adc_dist) AS BIGINT) AS adc_top5
       | FROM top5 GROUP BY q_id)
@@ -3240,7 +2939,7 @@ object Similarity {
     "v24_pq_sdc" -> s"""WITH $pqCtes,
       |sdctab AS (
       | SELECT a.m, a.code AS code_a, b.code AS code_b,
-      |  CAST(${pqDist("a.cv", "b.cv")} AS BIGINT) AS d
+      |  CAST(${duckL2("a.cv", "b.cv", PqSub)} AS BIGINT) AS d
       | FROM cb a JOIN cb b ON a.m = b.m),
       |qcodes AS (
       | SELECT vec_id AS q_id, m, code AS code_a FROM codes
@@ -3263,7 +2962,7 @@ object Similarity {
       | WHERE vec_id >= 100 AND vec_id < 120),
       |dtab AS (
       | SELECT q.q_id, q.m, c.code,
-      |  CAST(${pqDist("q.sub", "c.cv")} AS BIGINT) AS d
+      |  CAST(${duckL2("q.sub", "c.cv", PqSub)} AS BIGINT) AS d
       | FROM qsubs q JOIN cb c ON q.m = c.m),
       |adc AS (
       | SELECT d.q_id, k.vec_id, CAST(SUM(d.d) AS BIGINT) AS adc_dist
@@ -3275,26 +2974,9 @@ object Similarity {
       |   row_number() OVER (PARTITION BY q_id
       |     ORDER BY adc_dist, vec_id) AS rn
       |  FROM adc) t WHERE rn <= 5),
-      |tpairs AS (
-      | SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-      |  ${cos("q.embedding", "c.embedding")} AS sim
-      | FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-      | WHERE q.vec_id >= 100 AND q.vec_id < 120),
-      |truth AS (
-      | SELECT q_id, c_id FROM (
-      |  SELECT q_id, c_id,
-      |   row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rnk
-      |  FROM tpairs) t WHERE rnk <= 5),
-      |hs AS (
-      | SELECT t.q_id, CAST(COUNT(a.c_id) AS BIGINT) AS hits_sdc
-      | FROM truth t LEFT JOIN
-      |  (SELECT q_id, vec_id AS c_id FROM top5s) a
-      |  ON t.q_id = a.q_id AND t.c_id = a.c_id GROUP BY t.q_id),
-      |ha AS (
-      | SELECT t.q_id, CAST(COUNT(a.c_id) AS BIGINT) AS hits_adc
-      | FROM truth t LEFT JOIN
-      |  (SELECT q_id, vec_id AS c_id FROM top5a) a
-      |  ON t.q_id = a.q_id AND t.c_id = a.c_id GROUP BY t.q_id),
+      |${truthCtes(HeldOutSql, " t")},
+      |${hitsCte("hs", "hits_sdc", "(SELECT q_id, vec_id AS c_id FROM top5s)")},
+      |${hitsCte("ha", "hits_adc", "(SELECT q_id, vec_id AS c_id FROM top5a)")},
       |ssum AS (
       | SELECT q_id, CAST(SUM(sdc_dist) AS BIGINT) AS sdc_top5
       | FROM top5s GROUP BY q_id)
@@ -3304,51 +2986,12 @@ object Similarity {
       |FROM hs JOIN ha ON hs.q_id = ha.q_id
       | JOIN ssum ON hs.q_id = ssum.q_id ORDER BY hs.q_id""".stripMargin,
 
-    "v20_ivfpq_adc" -> {
+    "v20_ivfpq_adc" ->
       // DuckDB twin of IVF-PQ: v09's integer coarse training (T=1) +
       // pqCtes' residual-space codebook + the cell-scoped ADC scan.
-      def dist64(a: String, b: String): String =
-        s"list_sum(list_transform(range(64), ii -> ($a[ii+1] - $b[ii+1]) * ($a[ii+1] - $b[ii+1])))"
-      s"""WITH q AS (
-         | SELECT vec_id,
-         |  list_transform(ed, x -> CASE WHEN nrm = 0
-         |    THEN CAST(0 AS BIGINT)
-         |    ELSE CAST(round(x / nrm * 1000) AS BIGINT) END) AS qv
-         | FROM (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ed,
-         |   sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-         |        CAST(embedding AS DOUBLE[]))) AS nrm
-         |  FROM embeddings) tq),
-         |seed AS (
-         | SELECT vec_id AS cid, qv AS cv FROM q
-         | ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-         |a1 AS (
-         | SELECT vec_id, qv, cid FROM (
-         |  SELECT q.vec_id, q.qv, c.cid,
-         |   row_number() OVER (PARTITION BY q.vec_id
-         |     ORDER BY ${dist64("q.qv", "c.cv")}, c.cid) AS rn
-         |  FROM q CROSS JOIN seed c) t WHERE rn = 1),
-         |u1 AS (
-         | SELECT cid, dim,
-         |  CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS mval
-         | FROM (SELECT cid, generate_subscripts(qv, 1) AS dim,
-         |        unnest(qv) AS v FROM a1) t
-         | GROUP BY cid, dim),
-         |u1s AS (
-         | SELECT cid, list(mval ORDER BY dim) AS mv,
-         |  CAST(SUM(mval * mval) AS BIGINT) AS ss
-         | FROM u1 GROUP BY cid),
-         |c1 AS (
-         | SELECT cid, list_transform(mv, m -> CASE WHEN ss = 0
-         |   THEN CAST(0 AS BIGINT)
-         |   ELSE CAST(round(CAST(m AS DOUBLE) / sqrt(CAST(ss AS DOUBLE)) * 1000) AS BIGINT) END) AS cv
-         | FROM u1s),
-         |af AS (
-         | SELECT vec_id, qv, cid FROM (
-         |  SELECT q.vec_id, q.qv, c.cid,
-         |   row_number() OVER (PARTITION BY q.vec_id
-         |     ORDER BY ${dist64("q.qv", "c.cv")}, c.cid) AS rn
-         |  FROM q CROSS JOIN c1 c) t WHERE rn = 1),
+      s"""WITH $quantCte,
+         |${lloyd16Ctes(1)},
+         |${assignCte("af", "c1", aliased = false)},
          |resid AS (
          | SELECT a.vec_id, a.cid AS cell,
          |  list_transform(range(64), ii -> a.qv[ii+1] - c.cv[ii+1]) AS rv
@@ -3373,7 +3016,7 @@ object Similarity {
          | SELECT vec_id, cell, m, sub, code FROM (
          |  SELECT s.vec_id, s.cell, s.m, s.sub, c.code,
          |   row_number() OVER (PARTITION BY s.vec_id, s.m
-         |     ORDER BY ${pqDist("s.sub", "c.cv")}, c.code) AS rn
+         |     ORDER BY ${duckL2("s.sub", "c.cv", PqSub)}, c.code) AS rn
          |  FROM rsubs s JOIN seedsub c ON s.m = c.m) t WHERE rn = 1),
          |pu1 AS (
          | SELECT m, code, dim,
@@ -3387,15 +3030,15 @@ object Similarity {
          | SELECT vec_id, cell, m, code FROM (
          |  SELECT s.vec_id, s.cell, s.m, c.code,
          |   row_number() OVER (PARTITION BY s.vec_id, s.m
-         |     ORDER BY ${pqDist("s.sub", "c.cv")}, c.code) AS rn
+         |     ORDER BY ${duckL2("s.sub", "c.cv", PqSub)}, c.code) AS rn
          |  FROM rsubs s JOIN rcb c ON s.m = c.m) t WHERE rn = 1),
          |probes AS (
          | SELECT q_id, qv, p_cell, cv FROM (
          |  SELECT q.vec_id AS q_id, q.qv, c.cid AS p_cell, c.cv,
          |   row_number() OVER (PARTITION BY q.vec_id
-         |     ORDER BY ${dist64("q.qv", "c.cv")}, c.cid) AS prn
+         |     ORDER BY ${duckL2("q.qv", "c.cv")}, c.cid) AS prn
          |  FROM q CROSS JOIN c1 c
-         |  WHERE q.vec_id >= 100 AND q.vec_id < 120) t WHERE prn <= 4),
+         |  WHERE $HeldOutSql) t WHERE prn <= 4),
          |qres AS (
          | SELECT q_id, p_cell,
          |  list_transform(range(64), ii -> qv[ii+1] - cv[ii+1]) AS qr
@@ -3406,7 +3049,7 @@ object Similarity {
          | FROM qres CROSS JOIN ms),
          |dtab AS (
          | SELECT s.q_id, s.p_cell, s.m, c.code,
-         |  CAST(${pqDist("s.qsub", "c.cv")} AS BIGINT) AS d
+         |  CAST(${duckL2("s.qsub", "c.cv", PqSub)} AS BIGINT) AS d
          | FROM qrsubs s JOIN rcb c ON s.m = c.m),
          |adc AS (
          | SELECT d.q_id, k.vec_id, CAST(SUM(d.d) AS BIGINT) AS adc_dist
@@ -3420,16 +3063,7 @@ object Similarity {
          |     ORDER BY adc_dist, vec_id) AS rn
          |  FROM adc) t WHERE rn <= $PqShortlist),
          |top5 AS (SELECT q_id, vec_id AS c_id FROM short WHERE rn <= 5),
-         |tpairs AS (
-         | SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         |  ${cos("q.embedding", "c.embedding")} AS sim
-         | FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-         | WHERE q.vec_id >= 100 AND q.vec_id < 120),
-         |truth AS (
-         | SELECT q_id, c_id FROM (
-         |  SELECT q_id, c_id,
-         |   row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rnk
-         |  FROM tpairs) t WHERE rnk <= 5),
+         |${truthCtes(HeldOutSql, " t")},
          |rr5 AS (
          | SELECT q_id, c_id FROM (
          |  SELECT s.q_id, s.vec_id AS c_id,
@@ -3441,21 +3075,14 @@ object Similarity {
          |ncand AS (
          | SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_cand
          | FROM adc GROUP BY q_id),
-         |h AS (
-         | SELECT t.q_id, CAST(COUNT(a.c_id) AS BIGINT) AS hits_adc
-         | FROM truth t LEFT JOIN top5 a
-         |  ON t.q_id = a.q_id AND t.c_id = a.c_id GROUP BY t.q_id),
-         |hr AS (
-         | SELECT t.q_id, CAST(COUNT(a.c_id) AS BIGINT) AS hits_rr
-         | FROM truth t LEFT JOIN rr5 a
-         |  ON t.q_id = a.q_id AND t.c_id = a.c_id GROUP BY t.q_id)
+         |${hitsCte("h", "hits_adc", "top5")},
+         |${hitsCte("hr", "hits_rr", "rr5")}
          |SELECT h.q_id, n_cand, hits_adc,
          | CAST(hits_adc AS DOUBLE) / 5.0 AS recall_adc,
          | hits_rr, CAST(hits_rr AS DOUBLE) / 5.0 AS recall_rr
          |FROM ncand JOIN h ON ncand.q_id = h.q_id
          | JOIN hr ON h.q_id = hr.q_id
-         |ORDER BY h.q_id""".stripMargin
-    },
+         |ORDER BY h.q_id""".stripMargin,
 
     "v12_dim_stats" ->
       """WITH m AS (
@@ -3517,11 +3144,7 @@ object Similarity {
     // v28: v01's float-cosine truth vs the per-vector int8 codes ranked
     // by exact integer dot; overlap@5 + top-1 survival per query.
     "v28_int8_recall_audit" ->
-      s"""WITH pf AS (
-         | SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         |  ${cos("q.embedding", "c.embedding")} AS sim
-         | FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-         | WHERE q.vec_id < 20),
+      s"""WITH ${exactPairsCte("pf", First20Sql)},
          |tf AS (
          | SELECT q_id, c_id,
          |  CAST(row_number() OVER (PARTITION BY q_id
@@ -3562,15 +3185,7 @@ object Similarity {
 
     "v14_embed_dup_clusters" ->
       s"""WITH RECURSIVE $duckBandedPairCtes,
-         |edges AS (
-         | SELECT va AS a, vb AS b FROM neardup
-         | UNION SELECT vb, va FROM neardup
-         | UNION SELECT va, va FROM neardup
-         | UNION SELECT vb, vb FROM neardup),
-         |reach AS (
-         | SELECT a, b FROM edges
-         | UNION
-         | SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
+         |${Dedup.duckCcCtes("neardup", "va", "vb")}
          |SELECT a AS vec_id, CAST(MIN(b) AS BIGINT) AS cluster
          |FROM reach GROUP BY a ORDER BY vec_id""".stripMargin,
 
@@ -3678,7 +3293,7 @@ object Similarity {
     // (HUGEINT ≙ Spark's DECIMAL(38) for the ×10⁹ step, // ≙ div),
     // identical RRF fusion.
     "v25b_hybrid_rrf_indexed" ->
-      s"""WITH ${annIndexCtes("q.vec_id >= 100 AND q.vec_id < 120")},
+      s"""WITH ${annIndexCtes(HeldOutSql)},
          |vshort AS (
          | SELECT q_id, c_id, CAST(rnk AS BIGINT) AS r_vec
          | FROM reranked WHERE rnk <= 20),
@@ -3744,33 +3359,6 @@ object Similarity {
     // assignment and ONE depth-8 probe ranking shared by all four
     // operating points — each leg is a prn filter, like the engine.
     "v26_nprobe_sweep" -> {
-      def dist(a: String, b: String): String =
-        s"list_sum(list_transform(range(64), ii -> ($a[ii+1] - $b[ii+1]) * ($a[ii+1] - $b[ii+1])))"
-      def assignCte(name: String, cents: String): String =
-        s"""$name AS (
-           | SELECT vec_id, qv, cid FROM (
-           |  SELECT q.vec_id, q.qv, c.cid,
-           |   row_number() OVER (PARTITION BY q.vec_id
-           |     ORDER BY ${dist("q.qv", "c.cv")}, c.cid) AS rn
-           |  FROM q CROSS JOIN $cents c) t WHERE rn = 1)"""
-          .stripMargin
-      def updateCte(dimsName: String, centsName: String,
-                    assigned: String): String =
-        s"""$dimsName AS (
-           | SELECT cid, dim,
-           |  CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS mval
-           | FROM (SELECT cid, generate_subscripts(qv, 1) AS dim,
-           |        unnest(qv) AS v FROM $assigned) t
-           | GROUP BY cid, dim),
-           |${dimsName}s AS (
-           | SELECT cid, list(mval ORDER BY dim) AS mv,
-           |  CAST(SUM(mval * mval) AS BIGINT) AS ss
-           | FROM $dimsName GROUP BY cid),
-           |$centsName AS (
-           | SELECT cid, list_transform(mv, m -> CASE WHEN ss = 0
-           |   THEN CAST(0 AS BIGINT)
-           |   ELSE CAST(round(CAST(m AS DOUBLE) / sqrt(CAST(ss AS DOUBLE)) * 1000) AS BIGINT) END) AS cv
-           | FROM ${dimsName}s)""".stripMargin
       def legCtes(p: Int): String =
         s"""rk_p$p AS (
            | SELECT q_id, c_id,
@@ -3780,52 +3368,20 @@ object Similarity {
            |nc_p$p AS (
            | SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_cand_p$p
            | FROM cand WHERE prn <= $p GROUP BY q_id),
-           |h_p$p AS (
-           | SELECT t.q_id, CAST(COUNT(a.c_id) AS BIGINT) AS hits_p$p
-           | FROM truth t LEFT JOIN (
-           |  SELECT q_id, c_id FROM rk_p$p WHERE rnk <= 5) a
-           |  ON t.q_id = a.q_id AND t.c_id = a.c_id GROUP BY t.q_id)"""
+           |${hitsCte(s"h_p$p", s"hits_p$p",
+                s"(\n  SELECT q_id, c_id FROM rk_p$p WHERE rnk <= 5)")}"""
           .stripMargin
-      s"""WITH q AS (
-         | SELECT vec_id,
-         |  list_transform(ed, x -> CASE WHEN nrm = 0
-         |    THEN CAST(0 AS BIGINT)
-         |    ELSE CAST(round(x / nrm * 1000) AS BIGINT) END) AS qv
-         | FROM (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ed,
-         |   sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-         |        CAST(embedding AS DOUBLE[]))) AS nrm
-         |  FROM embeddings) tq),
-         |seed AS (
-         | SELECT vec_id AS cid, qv AS cv FROM q
-         | ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-         |${assignCte("a1", "seed")},
-         |${updateCte("u1", "c1", "a1")},
-         |${assignCte("a2", "c1")},
-         |${updateCte("u2", "c2", "a2")},
-         |tpairs AS (
-         | SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         |  ${cos("q.embedding", "c.embedding")} AS sim
-         | FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-         | WHERE q.vec_id >= 100 AND q.vec_id < 120),
-         |truth AS (
-         | SELECT q_id, c_id FROM (
-         |  SELECT q_id, c_id,
-         |   row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rnk
-         |  FROM tpairs) WHERE rnk <= 5),
-         |af AS (
-         | SELECT vec_id AS c_id, cid AS c_cell FROM (
-         |  SELECT q.vec_id, c.cid,
-         |   row_number() OVER (PARTITION BY q.vec_id
-         |     ORDER BY ${dist("q.qv", "c.cv")}, c.cid) AS rn
-         |  FROM q CROSS JOIN c2 c) t WHERE rn = 1),
+      s"""WITH $quantCte,
+         |${lloyd16Ctes(2)},
+         |${truthCtes(HeldOutSql)},
+         |${flatCellCte("af", "c2")},
          |pr AS (
          | SELECT q_id, p_cell, prn FROM (
          |  SELECT q.vec_id AS q_id, c.cid AS p_cell,
          |   row_number() OVER (PARTITION BY q.vec_id
-         |     ORDER BY ${dist("q.qv", "c.cv")}, c.cid) AS prn
+         |     ORDER BY ${duckL2("q.qv", "c.cv")}, c.cid) AS prn
          |  FROM q CROSS JOIN c2 c
-         |  WHERE q.vec_id >= 100 AND q.vec_id < 120) t WHERE prn <= 8),
+         |  WHERE $HeldOutSql) t WHERE prn <= 8),
          |cand AS (
          | SELECT p.q_id, a.c_id, p.prn,
          |  ${cos("qe.embedding", "ce.embedding")} AS sim
@@ -3888,23 +3444,10 @@ object Similarity {
          |ORDER BY vec_id""".stripMargin
   )
 
-  /** Exact integer squared L2 over a PqSub-dim DuckDB list pair. */
-  private def pqDist(a: String, b: String): String =
-    s"list_sum(list_transform(range($PqSub), ii -> ($a[ii+1] - $b[ii+1]) * ($a[ii+1] - $b[ii+1])))"
-
   /** DuckDB twin of [[pqEncode]]: normalized int64 vectors, per-subspace
     * md5-seeded codebooks, one floor-mean Lloyd iteration, dense codes. */
   private def pqCtes: String =
-    s"""q AS (
-       | SELECT vec_id,
-       |  list_transform(ed, x -> CASE WHEN nrm = 0
-       |    THEN CAST(0 AS BIGINT)
-       |    ELSE CAST(round(x / nrm * 1000) AS BIGINT) END) AS qv
-       | FROM (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ed,
-       |   sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-       |        CAST(embedding AS DOUBLE[]))) AS nrm
-       |  FROM embeddings) tq),
+    s"""$quantCte,
        |ms AS (SELECT unnest(range($PqM)) AS m),
        |subs AS (
        | SELECT vec_id, m,
@@ -3925,7 +3468,7 @@ object Similarity {
        | SELECT vec_id, m, sub, code FROM (
        |  SELECT s.vec_id, s.m, s.sub, c.code,
        |   row_number() OVER (PARTITION BY s.vec_id, s.m
-       |     ORDER BY ${pqDist("s.sub", "c.cv")}, c.code) AS rn
+       |     ORDER BY ${duckL2("s.sub", "c.cv", PqSub)}, c.code) AS rn
        |  FROM subs s JOIN seedsub c ON s.m = c.m) t WHERE rn = 1),
        |u1 AS (
        | SELECT m, code, dim,
@@ -3939,6 +3482,6 @@ object Similarity {
        | SELECT vec_id, m, code FROM (
        |  SELECT s.vec_id, s.m, c.code,
        |   row_number() OVER (PARTITION BY s.vec_id, s.m
-       |     ORDER BY ${pqDist("s.sub", "c.cv")}, c.code) AS rn
+       |     ORDER BY ${duckL2("s.sub", "c.cv", PqSub)}, c.code) AS rn
        |  FROM subs s JOIN cb c ON s.m = c.m) t WHERE rn = 1)""".stripMargin
 }

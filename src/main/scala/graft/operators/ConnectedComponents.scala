@@ -104,10 +104,15 @@ object ConnectedComponents {
     val edges = lazyBarrier(edgesIn.repartition(col("src")))
     val nodes = edges.select(col("src").as("id")).distinct()
     var lab = lazyBarrier(nodes.withColumn("lbl", col("id")))
-    // coalesce: an EMPTY edge set (a corpus with no near-dup pairs at
-    // all) must converge to empty labels, not NULL-crash the scalar.
-    var prevSum = lab.agg(coalesce(sum(col("lbl")), lit(0L)))
-      .head().getLong(0)
+    // The convergence scalar Σ lbl sums as DECIMAL(38,0): ids are
+    // arbitrary LONGs, and a LONG sum past 2^63 - 1 throws under ANSI
+    // mode (two ids near 2^62 suffice). coalesce: an EMPTY edge set (a
+    // corpus with no near-dup pairs at all) must converge to empty
+    // labels, not NULL-crash the scalar.
+    def labelSum(l: DataFrame): java.math.BigDecimal =
+      l.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")), lit(0)))
+        .head().getDecimal(0)
+    var prevSum = labelSum(lab)
     var converged = false
     var rounds = 0
     def hop(l: DataFrame): DataFrame = {
@@ -154,11 +159,17 @@ object ConnectedComponents {
           rounds += 1
         }
       }
-      val curSum = lab.agg(coalesce(sum(col("lbl")), lit(0L)))
-        .head().getLong(0)
-      converged = curSum == prevSum
+      val curSum = labelSum(lab)
+      converged = curSum.compareTo(prevSum) == 0
       prevSum = curSum
     }
     (lab, rounds)
   }
+
+  /** [[run]] over an UNDIRECTED pair frame holding exactly the node
+    * columns `a` and `b`: each pair is emitted in both directions as the
+    * symmetric `src`/`dst` edge list `run` requires. */
+  def runPairs(pairs: DataFrame, a: String, b: String): (DataFrame, Int) =
+    run(pairs.unionByName(pairs.select(col(b).as(a), col(a).as(b)))
+      .toDF("src", "dst"))
 }

@@ -31,8 +31,9 @@ import graft.llm.IndexStore
   *
   * Every row carries the q10 sentinel bracket (same best-of-2
   * discipline as Bench) so cross-round comparison is load-normalized,
-  * and the artifact records head_commit/src_dirty so BuildPinSpec can
-  * enforce the same freshness rule as the query pin.
+  * and the artifact records head_commit/src_dirty
+  * ([[graft.Bench.provenanceJson]]) so PinFreshnessSpec enforces the
+  * same freshness rule as on the query pin.
   *
   * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.BuildBench [sfDir]"
   */
@@ -85,19 +86,6 @@ object BuildBench {
     val sentPost = sentinel()
     val sent = math.min(sentPre, sentPost)
 
-    def git(cmd: String*): Option[String] = try {
-      import scala.jdk.CollectionConverters._
-      val p = new ProcessBuilder(("git" +: cmd).asJava)
-        .redirectErrorStream(true).start()
-      val o = new String(p.getInputStream.readAllBytes()).trim
-      if (p.waitFor() == 0) Some(o) else None
-    } catch { case _: Throwable => None }
-    val headJson = git("rev-parse", "HEAD").map { h =>
-      val d = git("status", "--porcelain", "--", "src/main")
-        .exists(_.nonEmpty)
-      s""","head_commit":"$h","src_dirty":$d"""
-    }.getOrElse("")
-
     val rows = (annRows.map(n => (n, annCold(n), annWarm(n))) ++
       txtRows.map(n => (n, txtCold(n), txtWarm(n))))
       .map { case (n, c, w) =>
@@ -108,7 +96,7 @@ object BuildBench {
     val out =
       f"""{"metric":"index_build","unit":"sec","sf":"$dir",""" +
         f""""sentinel_pre":$sentPre%.3f,"sentinel_post":$sentPost%.3f,""" +
-        f""""sentinel_sec":$sent%.3f,"builds":$rows$headJson}"""
+        f""""sentinel_sec":$sent%.3f,"builds":$rows${graft.Bench.provenanceJson}}"""
     println(out)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BUILD_OUT",
       "/root/repo/ann_build.json")

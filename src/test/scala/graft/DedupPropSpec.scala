@@ -323,6 +323,55 @@ class DedupPropSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(res.passed, res.status.toString)
   }
 
+  test("CC over node ids near 2^62: the per-round label sum passes " +
+    "Long.MaxValue, labels and round counts match the small-id graph") {
+    val s = spark
+    import s.implicits._
+    // Any two ids >= 2^62 already sum past 2^63 - 1, and Spark 4 runs
+    // ANSI mode, where a LONG sum that overflows throws. Shifting every
+    // id by 2^62 preserves their order, so the propagation must take the
+    // same hops and end on the same (shifted) labels.
+    val base = 1L << 62
+    val genCase = for {
+      n <- Gen.choose(2, 12)
+      nPairs <- Gen.choose(1, 14)
+      pairs <- Gen.listOfN(nPairs, for {
+        a <- Gen.choose(0, n - 1); b <- Gen.choose(0, n - 1)
+        if a != b
+      } yield (math.min(a, b).toLong, math.max(a, b).toLong))
+    } yield pairs.distinct
+    val prop = Prop.forAll(genCase) { pairs0 =>
+      // shrinking can step outside the generator's range
+      val pairs = pairs0.filter { case (a, b) => 0 <= a && a < b }
+      def cc(off: Long): (Map[Long, Long], Int) = {
+        val (lab, rounds) = graft.operators.ConnectedComponents.runPairs(
+          pairs.map { case (a, b) => (a + off, b + off) }.toDF("da", "db"),
+          "da", "db")
+        (lab.collect().map(r => (r.getLong(0) - off) ->
+          (r.getLong(1) - off)).toMap, rounds)
+      }
+      val parent = collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val expected = parent.keys.toSeq.map(x => x -> find(x)).toMap
+      val (small, smallRounds) = cc(0L)
+      val (big, bigRounds) = cc(base)
+      if (big != expected || bigRounds != smallRounds)
+        println(s"ids near 2^62: $pairs -> $big in $bigRounds rounds, " +
+          s"small ids -> $small in $smallRounds")
+      small == expected && big == expected && bigRounds == smallRounds
+    }
+    val res = ScTest.check(
+      ScTest.Parameters.default.withMinSuccessfulTests(8), prop)
+    assert(res.passed, res.status.toString)
+  }
+
   /** JVM mirror of Dedup's md5-prefix token hash (same bits as Spark's
     * conv(substring(md5(t),1,15),16,10) % P and DuckDB's twin). */
   private def tokHashJvm(t: String): Long = {

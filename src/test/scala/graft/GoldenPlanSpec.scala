@@ -728,6 +728,23 @@ class GoldenPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         "rowsOnlyByDesign with justification).")
   }
 
+  test("oracle well-formedness: every oracle SQL is non-empty, fully " +
+    "margin-stripped and fully interpolated") {
+    val bad = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap {
+      case (name, sql) =>
+        val margin = sql.linesIterator.map(_.trim)
+          .exists(l => l.startsWith("|") && !l.startsWith("||"))
+        Seq(
+          sql.trim.isEmpty -> "is empty",
+          margin -> ("has a line starting with a margin '|' (missed " +
+            "stripMargin)"),
+          Seq("${", "%s", "%%").exists(sql.contains) ->
+            "contains ${, %s or %% (missed interpolation or .format)")
+          .collect { case (true, why) => s"$name $why" }
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   test("golden inventory: every >2-sentinel bench query has a frozen plan") {
     val pinned = Paths.get("bench_pinned.json")
     assert(Files.exists(pinned),

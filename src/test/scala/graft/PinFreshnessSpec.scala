@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * every >2×-sentinel judgment keys off measured code that no longer
   * existed. Bench now stamps each artifact with the HEAD commit it
   * measured (`head_commit`) and whether `src/main` was dirty at
-  * measure time (`src_dirty`); this spec fails the suite whenever
+  * measure time (`src_dirty`, which must be present and false); this
+  * spec fails the suite whenever
   * `src/main` has commits the pin has not measured — the end-of-round
   * ordering invariant (all src commits → re-pin → commit pin LAST) as
   * a test, the same hardening GoldenPlanSpec's bench-coverage check
@@ -49,10 +50,10 @@ class PinFreshnessSpec extends AnyFunSuite {
         "bench_pinned.json) so freshness is checkable.")
     val dirty = """"src_dirty":(true|false)""".r
       .findFirstMatchIn(txt).map(_.group(1))
-    assert(!dirty.contains("true"),
-      "bench_pinned.json was measured with uncommitted src/main " +
-        "changes — the recorded head_commit does not identify the " +
-        "measured code. Commit first, then re-pin.")
+    assert(dirty.contains("false"),
+      s"bench_pinned.json src_dirty is ${dirty.getOrElse("missing")} — " +
+        "the recorded head_commit identifies the measured code only on " +
+        "a known-clean src/main. Commit first, then re-pin.")
     // Environment checks cancel (not fail): a sandbox without git or
     // with a shallow/foreign checkout can't evaluate ancestry.
     assume(git("rev-parse", "HEAD").isDefined, "git unavailable")
@@ -97,8 +98,9 @@ class PinFreshnessSpec extends AnyFunSuite {
     assert(head.nonEmpty, "ann_build.json carries no head_commit")
     val dirty = """"src_dirty":(true|false)""".r
       .findFirstMatchIn(txt).map(_.group(1))
-    assert(!dirty.contains("true"),
-      "ann_build.json was measured on a dirty src/main tree")
+    assert(dirty.contains("false"),
+      s"ann_build.json src_dirty is ${dirty.getOrElse("missing")} — it " +
+        "must be measured on a known-clean src/main tree")
     assume(git("rev-parse", "HEAD").isDefined, "git unavailable")
     assume(gitOk("cat-file", "-e", head.get),
       "build pin's head_commit unknown to this clone")
